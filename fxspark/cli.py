@@ -16,7 +16,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from fxspark import fx
-from fxspark.ingest import normalize
+from fxspark.ingest import normalize_parsed, parse_payloads
 from fxspark.ops.checks import check_report, observe_checks
 from fxspark.sink import (
     append_run_log,
@@ -53,20 +53,27 @@ def tick(
     else:
         raise ValueError("need rates_dir, or url_template + pairs_csv")
 
-    rates, quarantined = normalize(raw)
-    # Constraint metrics ride the store write (one pass, no validation
-    # re-scan): natural-key uniqueness, rate non-null + sane range.
-    rates, obs = observe_checks(
-        rates, key=list(KEYS), not_null=["rate"], ranges={"rate": (0.0, 1e6)}
-    )
-    existing = read_table(spark, store_path)
-    merged = upsert(existing, rates, KEYS, ORDER)
-    write_table(merged, store_path)
+    # One JSON parse per tick: the write, its key broadcast and the
+    # quarantine count all read this frame; released before returning.
+    parsed = parse_payloads(raw).persist()
+    try:
+        rates, quarantined = normalize_parsed(parsed)
+        # Constraint metrics ride the store write (one pass, no validation
+        # re-scan): natural-key uniqueness, rate non-null + sane range.
+        rates, obs = observe_checks(
+            rates, key=list(KEYS), not_null=["rate"], ranges={"rate": (0.0, 1e6)}
+        )
+        existing = read_table(spark, store_path)
+        merged = upsert(existing, rates, KEYS, ORDER)
+        write_table(merged, store_path)
 
-    store = read_table(spark, store_path)
-    result = fx.rate_change_report(store, now=now)
+        store = read_table(spark, store_path)
+        result = fx.rate_change_report(store, now=now)
+        if report or log_path is not None:
+            n_bad = quarantined.count()
+    finally:
+        parsed.unpersist()
     if report:
-        n_bad = quarantined.count()
         print(
             console_report(
                 result,
@@ -81,14 +88,13 @@ def tick(
         print(f"Script executed in {time.time() - t0:.2f} seconds")  # Fx_1min.py:262
     if log_path is not None:
         # S8: one structured record per tick (the .bat's `> log 2>&1`,
-        # machine-parseable). Forces the check Observation if `report`
-        # didn't already; both counts are micro-batch-bounded.
+        # machine-parseable).
         append_run_log(
             log_path,
             {
                 "ts_utc": dt.datetime.now(dt.timezone.utc).isoformat(),
                 "store": store_path,
-                "quarantined": quarantined.count(),
+                "quarantined": n_bad,
                 "checks": dict(check_report(obs.get)),
                 "elapsed_sec": round(time.time() - t0, 3),
             },

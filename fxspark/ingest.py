@@ -24,12 +24,29 @@ TIME_SERIES_KEY = "Time Series FX (Daily)"  # Fx_1min.py:69
 CLOSE_KEY = "4. close"  # Fx_1min.py:72
 
 
+def parse_payloads(raw: DataFrame) -> DataFrame:
+    """P1: ``raw`` plus each payload's parsed document as ``_doc``. Both
+    outputs of :func:`normalize_parsed` read it, so a caller that persists
+    this frame parses every payload once for rates and quarantine alike."""
+    return raw.withColumn("_doc", F.from_json(F.col("payload"), RAW_RATES_JSON))
+
+
 def normalize(
     raw: DataFrame,
     pair_format: str = "slash",
     ingestion_time: Column | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Normalize raw payloads → (rates, quarantine).
+    """Normalize raw payloads → (rates, quarantine):
+    :func:`normalize_parsed` over :func:`parse_payloads`."""
+    return normalize_parsed(parse_payloads(raw), pair_format, ingestion_time)
+
+
+def normalize_parsed(
+    parsed: DataFrame,
+    pair_format: str = "slash",
+    ingestion_time: Column | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Normalize parsed payloads (:func:`parse_payloads`) → (rates, quarantine).
 
     ``pair_format``: ``"slash"`` → ``EUR/USD`` (v2, ``Fx_1min.py:71``),
     ``"concat"`` → ``EURUSD`` (v1, ``update_exchange_rates.py:72``).
@@ -45,8 +62,6 @@ def normalize(
     if ingestion_time is None:
         ingestion_time = F.current_timestamp()
     sep = "/" if pair_format == "slash" else ""
-
-    parsed = raw.withColumn("_doc", F.from_json(F.col("payload"), RAW_RATES_JSON))
     series = F.col("_doc").getField(TIME_SERIES_KEY)
 
     bad = parsed.filter(

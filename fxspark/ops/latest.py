@@ -7,9 +7,13 @@ ccy_couple ORDER BY event_date_time DESC) = 1``
 
 Scale notes (100 TB):
 
-- ``latest_per_key_agg`` is the default: a hash aggregate with map-side partial
-  combine — one shuffle of (key → single struct), no per-partition sort, no
-  full materialization of any group. At 1B keys this is the plan you want.
+- ``latest_per_key_agg`` is the default: a map-side partial combine, one
+  shuffle of (key → single struct), and no full materialization of any group.
+  Its ``max_by`` buffer holds a struct, which a hash aggregate cannot update
+  in place, so it plans as a partial and a final SortAggregate with a sort on
+  each side of the shuffle (``explain()`` on the tick's upsert shows both).
+  The sorts cover every input row, which is why ``sink.upsert`` sends only
+  the store rows the batch touches through it.
 - ``latest_per_key_window`` keeps ALL columns of the winning row without a
   self-join, at the cost of a shuffle+sort per partition. Use when the payload
   is wide or when ``n > 1`` ranks are needed.
@@ -56,7 +60,8 @@ def latest_per_key_agg(
     order_by: Sequence[str] | str,
     payload: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Latest row per key via ``max_by`` aggregate (single shuffle, no sort).
+    """Latest row per key via ``max_by`` aggregate (single shuffle, sorted
+    on both sides — see the module's scale notes).
 
     ``order_by`` columns form the recency ordering (later entries break ties);
     the struct comparison is lexicographic, so ordering is total as long as the

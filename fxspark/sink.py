@@ -8,12 +8,16 @@ engine's equivalents:
 - ``upsert``        — last-writer-wins merge (v2 semantics)
 - ``insert_absent`` — keep-existing merge (v1 semantics)
 
-Both are pure DataFrame plans (union + keyed argmax — one shuffle). On a
-lakehouse deployment (Delta/Iceberg, not bundled here) the same semantics
-map to ``MERGE INTO``, which touches only matched files instead of
-rewriting the table; this module implements the portable parquet forms —
-full-rewrite ``upsert`` and partition-granular ``upsert_partitioned`` —
-which double as the semantics oracle for any such deployment.
+Both are pure DataFrame plans. ``upsert``'s merge cost follows the batch,
+as ``ON DUPLICATE KEY UPDATE``'s does: store rows whose key the batch does
+not touch pass through a broadcast anti join on the batch's keys, and only
+the touched store rows plus the batch go through the keyed argmax (one
+shuffle, sorted on both sides — ``ops/latest.py``). On a lakehouse
+deployment (Delta/Iceberg, not bundled here) the same semantics map to
+``MERGE INTO``, which touches only matched files instead of rewriting the
+table; this module implements the portable parquet forms — full-rewrite
+``upsert`` and partition-granular ``upsert_partitioned`` — which double as
+the semantics oracle for any such deployment.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ import os
 import shutil
 import tempfile
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,9 +42,40 @@ def upsert(
 ) -> DataFrame:
     """Last-writer-wins keyed merge (S5, ``Fx_1min.py:106-109``):
     ``ON DUPLICATE KEY UPDATE`` ≡ keep the greatest ``order_by`` row per key
-    of ``existing ∪ incoming``. Idempotent by construction."""
-    merged = incoming if existing is None else existing.unionByName(incoming)
-    return dedup_latest(merged, list(keys), list(order_by))
+    of ``existing ∪ incoming``. Idempotent by construction.
+
+    Precondition: ``existing`` is key-unique and has no NULL ``order_by``
+    value — true of every table ``upsert`` wrote, since ``dedup_latest``
+    output is. Under it the result equals ``dedup_latest(existing ∪
+    incoming)`` (up to the choice among rows tied on ``order_by``) while
+    only the keys the batch touches are sorted:
+
+    - the batch's keys are broadcast once;
+    - store rows with an untouched key pass straight through a
+      null-safe left-anti join, coalesced to at most the default
+      parallelism so the output's file count stays bounded tick after tick;
+    - the touched store rows (left-semi join) plus the batch go through
+      ``dedup_latest``.
+
+    Columns come out in ``dedup_latest``'s order: keys, then the other
+    columns of ``existing``. ``incoming`` is read by both the key broadcast
+    and the merge; persist it first if it is costly to recompute."""
+    keys, order_by = list(keys), list(order_by)
+    if existing is None:
+        return dedup_latest(incoming, keys, order_by)
+    probe = [f"__upsert_key{i}" for i in range(len(keys))]
+    touched_keys = F.broadcast(
+        incoming.select(*[F.col(k).alias(p) for k, p in zip(keys, probe)])
+    )
+    on = reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(p)) for k, p in zip(keys, probe)],
+    )
+    touched = existing.join(touched_keys, on, "left_semi")
+    merged = dedup_latest(touched.unionByName(incoming), keys, order_by)
+    width = existing.sparkSession.sparkContext.defaultParallelism
+    untouched = existing.join(touched_keys, on, "left_anti").coalesce(width)
+    return untouched.select(*merged.columns).unionByName(merged)
 
 
 def insert_absent(

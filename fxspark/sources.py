@@ -17,6 +17,7 @@ isolation (the reference's try/except per future, O4) — failures become
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,10 +38,14 @@ def json_dir_rates(spark: SparkSession, directory: str) -> DataFrame:
 
     Distributed read via ``wholeTextFiles`` — each file is one row; the pair
     is recovered from the file name, exactly mirroring the per-pair HTTP
-    response mapping.
+    response mapping. The schema is declared, so building the frame runs
+    no Spark job; a directory with no ``*.json`` gives an empty frame.
     """
-    rdd = spark.sparkContext.wholeTextFiles(os.path.join(directory, "*.json"))
-    df = rdd.toDF(["_path", "payload"])
+    if not os.path.isdir(directory):
+        raise FileNotFoundError(f"rates directory not found: {directory}")
+    pattern = os.path.join(directory, "*.json")
+    rows = spark.sparkContext.wholeTextFiles(pattern) if glob.glob(pattern) else []
+    df = spark.createDataFrame(rows, "_path string, payload string")
     return df.select(
         F.regexp_extract(F.col("_path"), r"([A-Z]+)_([A-Z]+)\.json$", 1).alias(
             "base_currency"

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from fxspark.ingest import normalize
+from fxspark.ingest import normalize_parsed, parse_payloads
 from fxspark.sink import read_table, upsert, write_table
 
 KEYS = ("ccy_couple", "date")
@@ -56,9 +56,14 @@ def run_upsert_stream(
     """
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rates, _bad = normalize(batch_df)
-        existing = read_table(spark, store_path)
-        write_table(upsert(existing, rates, KEYS, ORDER), store_path)
+        # upsert reads the batch twice (key broadcast + merge): parse once
+        parsed = parse_payloads(batch_df).persist()
+        try:
+            rates, _bad = normalize_parsed(parsed)
+            existing = read_table(spark, store_path)
+            write_table(upsert(existing, rates, KEYS, ORDER), store_path)
+        finally:
+            parsed.unpersist()
 
     writer = stream_rates(spark, payload_dir).writeStream.foreachBatch(merge_batch)
     writer = writer.option("checkpointLocation", checkpoint_dir)

@@ -219,6 +219,73 @@ def test_tick_structured_run_log(spark, fixture_dir, tmp_path):
         assert rec["elapsed_sec"] > 0
 
 
+def test_tick_on_empty_payload_dir_is_noop_merge(spark, fixture_dir, tmp_path, capsys):
+    """A fetch that produced no ``*.json`` is an empty batch, not an error:
+    the store keeps its rows, the report still prints, and the checks count
+    zero fetched rows. A missing directory is still an error."""
+    store = str(tmp_path / "exchange_rates")
+    tick(spark, store, rates_dir=str(fixture_dir), now=NOW, report=False)
+    before = sorted(map(tuple, spark.read.parquet(store).collect()))
+    empty = tmp_path / "no_payloads"
+    empty.mkdir()
+    capsys.readouterr()
+    tick(spark, store, rates_dir=str(empty), now=NOW)
+    printed = capsys.readouterr().out
+    assert printed.startswith("ccy_couple")
+    assert "[check] rows: 0" in printed.splitlines()
+    assert "[quarantine]" not in printed
+    assert sorted(map(tuple, spark.read.parquet(store).collect())) == before
+    with pytest.raises(FileNotFoundError):
+        tick(spark, store, rates_dir=str(tmp_path / "missing"), now=NOW)
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_tick_releases_what_it_persists(spark, fixture_dir, tmp_path, monkeypatch):
+    """Eager work stays inside the tick: after it returns, and after it
+    raises partway, no RDD or cached plan it created stays persisted and the
+    session conf is unchanged. Over repeated ticks whose batches leave most
+    of the store untouched, its file count stays within the default
+    parallelism plus one."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    rdds, conf, uncached = _persisted_rdds(spark), spark.conf.getAll, cache.isEmpty()
+    store = tmp_path / "exchange_rates"
+    tick(spark, str(store), rates_dir=str(fixture_dir), now=NOW, report=False)
+    # each later tick fetches one new day, so every earlier tick's file
+    # holds rows the batch leaves untouched
+    width = spark.sparkContext.defaultParallelism
+    for day in range(1, 11):
+        batch = tmp_path / f"batch{day}"
+        batch.mkdir()
+        doc = av_doc("EUR", "USD", {f"2024-12-{day:02d}": 1 + day / 100})
+        (batch / "EUR_USD.json").write_text(doc)
+        tick(spark, str(store), rates_dir=str(batch), now=NOW, report=False)
+        assert len(list(store.glob("*.parquet"))) <= width + 1
+    assert _persisted_rdds(spark) <= rdds and cache.isEmpty() == uncached
+    assert spark.conf.getAll == conf
+
+    # raises after the write has materialized the parsed batch
+    def fail(*_a, **_k):
+        raise RuntimeError("report failed")
+
+    monkeypatch.setattr(fx, "rate_change_report", fail)
+    with pytest.raises(RuntimeError, match="report failed"):
+        tick(spark, str(store), rates_dir=str(fixture_dir), now=NOW, report=False)
+    monkeypatch.undo()
+    assert _persisted_rdds(spark) <= rdds and cache.isEmpty() == uncached
+
+    # raises reading an unreadable store
+    bad = tmp_path / "unreadable"
+    bad.mkdir()
+    (bad / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception):
+        tick(spark, str(bad), rates_dir=str(fixture_dir), now=NOW, report=False)
+    assert _persisted_rdds(spark) <= rdds and cache.isEmpty() == uncached
+    assert spark.conf.getAll == conf
+
+
 def test_p9_fixed_offset_cutoff_replicates_v1_dst_bug():
     """P9 (update_exchange_rates.py:121): hardcoded UTC-4 cutoff. In
     summer (EDT) it equals the DST-correct P8 cutoff; in winter (EST,

@@ -40,8 +40,9 @@ def test_waiting_suppliers_single_lineitem_scan(spark, sf_dir):
 
 
 def test_latest_event_agg_is_partial_final(spark, sf_dir):
-    """latest-per-key via max_by must be a partial/final hash aggregate with
-    ONE exchange — not a window sort."""
+    """latest-per-key via max_by must be a partial/final aggregate with ONE
+    exchange — not a window sort. (Its struct buffer makes both halves
+    SortAggregates; ops/latest.py's scale notes.)"""
     plan = _plan(spark, sf_dir, "latest_event_per_user")
     assert plan.count("Exchange") == 1, plan[:3000]
     assert "Window" not in plan

@@ -92,6 +92,55 @@ def test_dedup_latest_conserves_distinct_keys(spark, rows):
     assert out.count() == len({k for k, _, _ in rows})
 
 
+# Two-part keys with NULL parts; small order range so store and batch tie.
+_key_part = st.tuples(st.sampled_from(["a", "b", None]), st.sampled_from([0, 1, None]))
+_order = st.integers(min_value=0, max_value=3)
+_value = st.integers(min_value=-9, max_value=9)
+UPSERT_SCHEMA = "k1 string, k2 int, o int, v int, uid int"
+
+
+@given(
+    store=st.dictionaries(_key_part, st.tuples(_order, _value), max_size=6),
+    batch=st.lists(st.tuples(_key_part, st.none() | _order, _value), max_size=8),
+)
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_upsert_equals_dedup_of_union(spark, store, batch):
+    """For any key-unique store, the split upsert (untouched keys pass
+    through, touched keys are merged) equals the plain form it replaced,
+    dedup_latest(existing ∪ incoming): same rows, same column order. The
+    batch carries NULL key parts, NULL orders, duplicate keys and order ties
+    with the store; either side may be empty. Among rows tied on the order
+    column either form may keep any one, so a tied key only needs a
+    winner from the tie."""
+    keys, order = ["k1", "k2"], ["o"]
+    existing_rows = [(k1, k2, o, v, i) for i, ((k1, k2), (o, v)) in enumerate(store.items())]
+    incoming_rows = [(k1, k2, o, v, len(store) + i)
+                     for i, ((k1, k2), o, v) in enumerate(batch)]
+    existing = spark.createDataFrame(existing_rows, UPSERT_SCHEMA)
+    incoming = spark.createDataFrame(incoming_rows, UPSERT_SCHEMA)
+
+    got = upsert(existing, incoming, keys, order)
+    want = dedup_latest(existing.unionByName(incoming), keys, order)
+    assert got.columns == want.columns
+
+    def by_key(df):
+        rows = [r.asDict() for r in df.collect()]
+        out = {(r["k1"], r["k2"]): r for r in rows}
+        assert len(out) == len(rows)
+        return out
+
+    got_rows, want_rows = by_key(got), by_key(want)
+    assert got_rows.keys() == want_rows.keys()
+    for key, row in got_rows.items():
+        tied = [r for r in existing_rows + incoming_rows
+                if r[:2] == key and r[2] == want_rows[key]["o"]]
+        if len(tied) == 1:
+            assert row == want_rows[key]
+        else:
+            assert tuple(row[c] for c in ("k1", "k2", "o", "v", "uid")) in tied
+
+
 # --- round-2 curation-op properties -----------------------------------------
 
 texts_strategy = st.lists(
