@@ -385,8 +385,10 @@ def main() -> None:
         """The synthetic probes' timing loop, with the SAME adaptive-rep
         promotion the registry extensions get (round 18 — the r17 outlier
         list was dominated by the single-rep probes, which the old inline
-        loops always timed exactly once): warm run, then median of
-        EXT_REPS runs, promoted to ≥3 when the warm run exceeds 1 s."""
+        loops always timed exactly once): an untimed warm-up, then a timed
+        probe run that sets the rep count (EXT_REPS, promoted to ≥3 when the
+        probe exceeds 1 s) and counts as the first timed rep; the median of
+        those reps is recorded."""
         fn()  # warm (also absorbs codegen)
         t0 = time.perf_counter()
         fn()

@@ -11,84 +11,17 @@ label-propagation tier of ``ops/dedup.connected_components``).
 Determinism: the per-node contribution sum is decimal-exact (cast to
 DECIMAL(38,18), summed, cast back), so the result is bit-identical across
 partitionings and engines — an unrolled SQL oracle replays it exactly.
+
+Shuffle width: no op here reads or writes the session conf or
+repartitions for parallelism. Every stage runs at the session's
+``spark.sql.shuffle.partitions`` (set once by ``session.get_spark``), and
+AQE sizes the shuffles at run time where it is on.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-@contextmanager
-def _wide_shuffle(sess: SparkSession):
-    """Temporarily raise ``spark.sql.shuffle.partitions`` to the session's
-    defaultParallelism for an EAGER materialization of a heavy stage, iff
-    the session conf is narrower (guide §2.1: size shuffles to the stage's
-    data, not one global knob). The bench regime pins 8 partitions for the
-    KB-sized rollups; a stage that probes tens of millions of rows should
-    run at ≥ cores tasks instead — widening the conf around the
-    materializing action widens the EXISTING exchanges without adding one
-    (the round-17 keyed-repartition variants added a full extra pass of
-    the wedge frame and measured worse). On a cluster whose conf already
-    ≥ cores this is a no-op. The conf is restored before downstream
-    KB-sized aggregations plan."""
-    n = sess.sparkContext.defaultParallelism
-    try:
-        cur = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # e.g. "auto" — leave the conf alone
-        cur = None
-    if cur is None or cur >= n:
-        yield
-        return
-    sess.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        sess.conf.set("spark.sql.shuffle.partitions", str(cur))
-
-
-def _spread_iteration_frame(df: DataFrame) -> DataFrame:
-    """Rebalance the per-iteration edge frame to the session's full
-    parallelism BEFORE it is checkpointed, iff it arrives with fewer
-    partitions than cores (guide §2.5: scale-adaptive partitioning, not a
-    constant). The rank-propagation iteration stage is CPU-bound — one
-    double→DECIMAL(38,18) conversion plus a wide-decimal partial sum per
-    edge row, repeated n_iter times — so its task count should track
-    cores, not the shuffle-partition setting tuned for the KB-sized
-    rollups (the bench pins 8). One extra exchange before the single
-    materialization buys n_iter fully-parallel passes; at cluster scale
-    the upstream shuffle already yields >= cores partitions and this is a
-    no-op (measured: part_copurchase_ppr 8.7 → 7.8 s at sf0.1 under the
-    bench regime; micro-bench of the iteration sum alone 0.99 → 0.66 s
-    at 2.4M rows, 8 → 32 tasks).
-
-    Only called when the CALLER opts in (``spread_iterations=True`` on the
-    rank ops): the op cannot cheaply see the frame's size (a row-count
-    probe forces an extra materialization; the rdd partition probe forces
-    an extra physical planning pass — both measured regressions), but the
-    caller knows whether its graph SCALES WITH THE INPUT. The co-purchase
-    graphs grow linearly in orders and opt in; the nation trade graph is
-    ≤ 625 edges at any scale factor and must not pay a 32-partition
-    shuffle plus n_iter × 32 near-empty tasks (round-17 regression:
-    nation_trade_pagerank 1.60 → 2.21 s from an unguarded spread).
-
-    The decision reads the shuffle-partitions CONF — the frame always
-    arrives off a shuffle (the out-weight join), so that conf IS its
-    partition count — rather than probing ``df.rdd.getNumPartitions()``:
-    the rdd probe forces a full extra physical planning of the caller's
-    edge-build lineage per query build (+0.6 s on nation_trade_pagerank's
-    6-table join lineage, round-17 after-bench regression, reverted)."""
-    sess = df.sparkSession
-    n = sess.sparkContext.defaultParallelism
-    try:
-        upstream = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # e.g. "auto" — leave the frame alone
-        return df
-    if upstream < n:
-        return df.repartition(n)
-    return df
 
 
 def pagerank(
@@ -98,7 +31,6 @@ def pagerank(
     weight: str | None = None,
     n_iter: int = 5,
     damping: float = 0.85,
-    spread_iterations: bool = False,
 ) -> DataFrame:
     """Weighted PageRank, ``n_iter`` synchronous iterations.
 
@@ -116,10 +48,6 @@ def pagerank(
     fell out incidentally at the out-weight equi-join, which is Spark
     join semantics, not a declared contract.
 
-    ``spread_iterations``: opt-in widening of the per-iteration edge frame
-    to full parallelism (see :func:`_spread_iteration_frame`) — pass True
-    only for graphs that scale with the input data.
-
     Returns (node, rank) with rank a raw double — round at the query edge.
     """
     w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
@@ -134,10 +62,7 @@ def pagerank(
     # materialize once so the join/agg per iteration reads a checkpoint, not
     # the full upstream lineage.
     e = e.join(out, "_src").withColumn("_share", F.col("_w") / F.col("_out"))
-    e = e.select("_src", "_dst", "_share")
-    if spread_iterations:
-        e = _spread_iteration_frame(e)
-    e = e.localCheckpoint()
+    e = e.select("_src", "_dst", "_share").localCheckpoint()
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -247,7 +172,6 @@ def triangles_per_node(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    wide_close: bool = False,
 ) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
     undirected edge list (rows may arrive in either direction and
@@ -267,17 +191,6 @@ def triangles_per_node(
     on exact integers. Plan: three hash joins + two hash-aggs, all keyed;
     nothing global, nothing quadratic in any node's degree.
 
-    ``wide_close``: caller opt-in (the ``spread_iterations`` discipline —
-    pass True only for graphs that scale with the input data): eagerly
-    materialize the per-node triangle counts with the shuffle-partition
-    conf temporarily widened to defaultParallelism, so the wedge
-    enumeration + close (the Σ out-deg² stage — 41M rows at sf0.1,
-    probed in only 8 tasks under the bench regime) runs at ≥ cores tasks
-    with NO extra exchange. Round-18 skew probe first: per-8-bucket wedge
-    mass max/median 1.02 (top-20 keys own 0.21%), so the stage is
-    parallelism-bound, not skew-bound — salting declined, widening wins
-    (interleaved A/B 6.17 → 5.10 s solo; the r17 keyed-repartition
-    variants that ADDED an exchange measured worse and stay rejected).
     Counts are exact integers, so the result is partitioning-invariant.
     """
     u, v = F.col(src), F.col(dst)
@@ -364,13 +277,6 @@ def triangles_per_node(
         .groupBy("n")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    if wide_close:
-        # The lazy e/oe checkpoints materialize inside this job too, so the
-        # whole wedge pipeline (orientation joins, wedge join, semi close,
-        # count rollup) runs under the widened conf; the final degree join
-        # below plans later, back at the session's setting.
-        with _wide_shuffle(edges.sparkSession):
-            per_node = per_node.localCheckpoint()
     d = F.col("deg").cast("double")
     return (
         deg.filter(F.col("deg") >= 2)
@@ -452,7 +358,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     prune_eps: float | None = None,
     nodes: DataFrame | None = None,
-    spread_iterations: bool = False,
 ) -> DataFrame:
     """Personalized PageRank: identical recurrence to :func:`pagerank`
     except the teleport mass returns to a SOURCE SET instead of spreading
@@ -489,10 +394,6 @@ def personalized_pagerank(
     that set (e.g. off the same checkpointed edge aggregate) pass it in
     to skip this op's full-edge-list distinct; when in doubt, leave it
     None and let the op derive it.
-
-    ``spread_iterations``: opt-in widening of the per-iteration edge
-    frame to full parallelism (see :func:`_spread_iteration_frame`) —
-    pass True only for graphs that scale with the input data.
     """
     w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = edges.select(
@@ -500,10 +401,7 @@ def personalized_pagerank(
     )
     out = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
     e = e.join(out, "_src").withColumn("_share", F.col("_w") / F.col("_out"))
-    e = e.select("_src", "_dst", "_share")
-    if spread_iterations:
-        e = _spread_iteration_frame(e)
-    e = e.localCheckpoint()
+    e = e.select("_src", "_dst", "_share").localCheckpoint()
     # ``nodes``: caller-supplied node frame (one column, exactly the union
     # of edge endpoints — the callers that pass it derive it from the SAME
     # checkpointed edge aggregate). Skips this op's full-edge-list distinct,

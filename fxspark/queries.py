@@ -12549,21 +12549,6 @@ def q_orders_seasonal_naive_mape(
     )
 
 
-def _copurchase_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical (src < dst) co-purchase pair stream off the order-keyed
-    self-join — the exact clustering query's edge build, extracted so the
-    wedge-close plan pin (tests/test_plans.py) lints the REGISTERED build
-    and can never drift from it (round-18 review finding: since
-    ``wide_close=True`` materializes the close at build time, the
-    registered query's returned plan no longer contains the wedge
-    pipeline, so the pin must rebuild it from this shared helper)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    a = op.select("l_orderkey", F.col("l_partkey").alias("src"))
-    b = op.select("l_orderkey", F.col("l_partkey").alias("dst"))
-    return a.join(b, "l_orderkey").filter(F.col("src") < F.col("dst"))
-
-
 @query(
     "part_copurchase_clustering",
     oracle="""
@@ -12616,15 +12601,19 @@ def q_part_copurchase_clustering(
     83M rows — Ω(Σ out-deg²) is the information floor for exact
     triangle counts. ~3.3 s solo at sf0.1 / ~6.4 s in-sweep (the r10
     "~9-15 s" records were sweep-context readings — SCALE.md §25.4);
-    the wedge close never sorts the 83M-row frame at runtime (AQE's
-    full join ladder — session.py — picks broadcast/shuffled-hash); checkpointing the oriented edges was A/B-measured
-    neutral (recompute is not the cost). Real
-    co-purchase graphs are power-law sparse; orientation is what keeps
-    their hubs from going quadratic."""
+    the wedge close carries a shuffle-hash hint, so it never sorts the
+    83M-row frame, and it runs at the session's shuffle width
+    (``get_spark``'s partition count, resized by AQE where it is on)
+    like every other stage. Real co-purchase graphs are power-law sparse;
+    orientation is what keeps their hubs from going quadratic."""
     from fxspark.ops.graph import triangles_per_node
 
+    li = load_table(spark, sf_dir, "lineitem")
+    op = li.select("l_orderkey", "l_partkey").distinct()
+    a = op.select("l_orderkey", F.col("l_partkey").alias("src"))
+    b = op.select("l_orderkey", F.col("l_partkey").alias("dst"))
     return triangles_per_node(
-        _copurchase_pair_edges(spark, sf_dir), wide_close=True
+        a.join(b, "l_orderkey").filter(F.col("src") < F.col("dst"))
     )
 
 
@@ -12916,7 +12905,7 @@ def q_part_copurchase_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranks = personalized_pagerank(
         edges, sources, weight="w", n_iter=5, damping=0.85,
-        nodes=nodes_in_graph, spread_iterations=True,
+        nodes=nodes_in_graph,
     )
     return ranks.select(
         F.col("node").alias("part"), F.round("rank", 9).alias("ppr")
@@ -15283,7 +15272,7 @@ def q_part_copurchase_ppr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranks = personalized_pagerank(
         edges, sources, weight="w", n_iter=5, damping=0.85, prune_eps=1e-15,
-        nodes=nodes_in_graph, spread_iterations=True,
+        nodes=nodes_in_graph,
     )
     return (
         ranks.orderBy(F.round("rank", 9).desc(), F.col("node").asc())

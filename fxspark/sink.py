@@ -252,19 +252,17 @@ def upsert_partitioned(
     if not touched:
         return touched
     # Hive partition values are directory-name strings; left to inference the
-    # read-back type drifts from the batch's ("2024-01-01" → DATE) and every
-    # later tick merges mismatched schemas. Pin inference off, then cast the
-    # store to the batch's exact schema so non-string partition keys round-trip.
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
+    # read-back type drifts from the batch's ("2024-01-01" → DATE, "007" → 7)
+    # and every later tick merges mismatched schemas. Reading with the batch's
+    # declared schema types the partition column as the batch does, whatever
+    # the session's inference setting; the declared read puts the partition
+    # column last, so restore the batch's column order.
     if os.path.exists(path):
         current = (
-            spark.read.parquet(path)
+            spark.read.schema(incoming.schema)
+            .parquet(path)
             .filter(F.col(partition_col).isin(touched))
-            .select(
-                *[F.col(f.name).cast(f.dataType) for f in incoming.schema.fields]
-            )
+            .select(*incoming.columns)
         )
         merged = upsert(current, incoming, keys, order_by)
     else:

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
+import hashlib
 import math
 
 import duckdb
@@ -17,7 +18,7 @@ import pandas as pd
 
 from fxspark.session import TABLES
 
-__all__ = ["duck_connect", "run_oracle", "compare", "diff_report"]
+__all__ = ["duck_connect", "run_oracle", "compare", "vhash", "diff_report"]
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -60,6 +61,15 @@ def _canon(df: pd.DataFrame) -> list[tuple]:
         for row in df[cols].itertuples(index=False, name=None)
     ]
     return sorted(rows)
+
+
+def vhash(pdf):
+    """Order-insensitive value hash of a frame: md5 over its rows, columns
+    sorted by name and rows sorted by their repr'd tuple — the hash check
+    the verify tools apply."""
+    cols = sorted(pdf.columns)
+    return hashlib.md5(repr(sorted(tuple(repr(v) for v in r)
+        for r in pdf[cols].itertuples(index=False, name=None))).encode()).hexdigest()
 
 
 def compare(spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> dict:

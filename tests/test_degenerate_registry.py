@@ -82,6 +82,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+from datetime import date
 
 import duckdb
 import pytest
@@ -108,13 +109,20 @@ deg_sweep = _load("degenerate_sweep")
 # `pytest tests/` far past the driver's verify window — VERIFY_r17 recorded
 # a truncated run (53 dots, no summary), which left the suite without
 # driver-side green. The default tier now sweeps a DETERMINISTIC 1/8 slice
-# of the registry per axis (sorted names[axis_idx::8], so the ten axes
-# cover interleaved slices and every registry query runs on at least one
-# degenerate axis per default run); FXSPARK_FULL_DEGEN=1 restores the full
+# of the registry per axis, sorted names[(axis_idx + rotation) % 8 :: 8]: the
+# first eight axes cover all eight slices and every registry query runs on
+# at least one degenerate axis per default run. Ten axes share eight
+# slices, so a fixed offset would never give the last two axes (dups, ties)
+# to six of the slices; the rotation is the calendar day's ordinal, so
+# every query meets every axis within 8 consecutive daily runs at the same
+# per-run cost; failure messages carry the rotation to reproduce the
+# slice. FXSPARK_FULL_DEGEN=1 restores the full
 # ten-sweep gate (the per-round out-of-band verification — the verify
 # skill's step 5 — runs it that way). The fixture-shape tests and the
 # divergence pins always run in full.
 _FULL_DEGEN = os.environ.get("FXSPARK_FULL_DEGEN") == "1"
+_ROTATION = date.today().toordinal() % 8
+_WHERE = f"slice rotation {_ROTATION} (date.today().toordinal() % 8)"
 
 
 def _axis_slice(axis_idx: int, always: set[str] | None = None):
@@ -126,7 +134,7 @@ def _axis_slice(axis_idx: int, always: set[str] | None = None):
     from fxspark.queries import QUERIES
 
     names = sorted(QUERIES)
-    picked = set(names[axis_idx % 8 :: 8]) | (always or set())
+    picked = set(names[(axis_idx + _ROTATION) % 8 :: 8]) | (always or set())
     return sorted(picked)
 
 
@@ -177,8 +185,8 @@ def test_registry_on_empty_tables(spark, degenerate_dirs):
     ok, fails = deg_sweep.sweep(
         spark, degenerate_dirs[0], names=names, verbose=False
     )
-    assert not fails, fails
-    assert len(ok) >= _expected_n(names)
+    assert not fails, (_WHERE, fails)
+    assert len(ok) >= _expected_n(names), _WHERE
 
 
 def test_registry_on_unit_tables(spark, degenerate_dirs):
@@ -187,8 +195,8 @@ def test_registry_on_unit_tables(spark, degenerate_dirs):
     ok, fails = deg_sweep.sweep(
         spark, degenerate_dirs[1], names=names, verbose=False
     )
-    assert not fails, fails
-    assert len(ok) >= _expected_n(names)
+    assert not fails, (_WHERE, fails)
+    assert len(ok) >= _expected_n(names), _WHERE
 
 
 def test_nulls_fixture_shape(nulls_dir, sf_dir):
@@ -215,8 +223,8 @@ def test_registry_on_all_null_payload(spark, nulls_dir):
     (default tier: axis slice 2; full under FXSPARK_FULL_DEGEN=1)."""
     names = _axis_slice(2)
     ok, fails = deg_sweep.sweep(spark, nulls_dir, names=names, verbose=False)
-    assert not fails, fails
-    assert len(ok) >= _expected_n(names)
+    assert not fails, (_WHERE, fails)
+    assert len(ok) >= _expected_n(names), _WHERE
 
 
 def test_registry_on_alternating_null_payload(spark, mixed_dir):
@@ -225,8 +233,8 @@ def test_registry_on_alternating_null_payload(spark, mixed_dir):
     just NULL propagation) can diverge."""
     names = _axis_slice(3)
     ok, fails = deg_sweep.sweep(spark, mixed_dir, names=names, verbose=False)
-    assert not fails, fails
-    assert len(ok) >= _expected_n(names)
+    assert not fails, (_WHERE, fails)
+    assert len(ok) >= _expected_n(names), _WHERE
 
 
 def test_ansi_divide_by_zero_divergence_pin(spark):
@@ -316,8 +324,8 @@ def test_registry_on_zipf_skewed_keys(spark, skew_dirs):
     ok, fails = deg_sweep.sweep(
         spark, skew_dirs[0], names=names, verbose=False
     )
-    assert not fails, fails
-    assert len(ok) >= _expected_n(names)
+    assert not fails, (_WHERE, fails)
+    assert len(ok) >= _expected_n(names), _WHERE
 
 
 def test_registry_on_single_key(spark, skew_dirs):
@@ -328,8 +336,8 @@ def test_registry_on_single_key(spark, skew_dirs):
     ok, fails = deg_sweep.sweep(
         spark, skew_dirs[1], names=names, verbose=False
     )
-    assert not fails, fails
-    assert len(ok) >= _expected_n(names)
+    assert not fails, (_WHERE, fails)
+    assert len(ok) >= _expected_n(names), _WHERE
 
 
 @pytest.fixture(scope="module")
@@ -371,8 +379,8 @@ def test_registry_on_independent_nulls(spark, inulls_dir):
     green (the round-16 ADVICE class: asof/nearest left-side NULL ts)."""
     names = _axis_slice(6)
     ok, fails = deg_sweep.sweep(spark, inulls_dir, names=names, verbose=False)
-    assert not fails, fails
-    assert len(ok) >= _expected_n(names)
+    assert not fails, (_WHERE, fails)
+    assert len(ok) >= _expected_n(names), _WHERE
 
 
 @pytest.fixture(scope="module")
@@ -408,8 +416,8 @@ def test_registry_on_null_join_keys(spark, nullkeys_dir):
     ok, fails = deg_sweep.sweep(
         spark, nullkeys_dir, names=names, verbose=False
     )
-    assert not fails, fails
-    assert len(ok) >= _expected_n(names)
+    assert not fails, (_WHERE, fails)
+    assert len(ok) >= _expected_n(names), _WHERE
 
 
 @pytest.fixture(scope="module")
@@ -483,11 +491,11 @@ def test_registry_on_duplicate_keys(spark, dups_dir, monkeypatch):
     }
     other = {n: r for n, r in fails.items() if n not in raised}
     assert raised == DUPS_BOUNDARY, (
-        f"raised-but-undeclared={sorted(raised - DUPS_BOUNDARY)} "
+        f"{_WHERE}: raised-but-undeclared={sorted(raised - DUPS_BOUNDARY)} "
         f"declared-but-did-not-raise={sorted(DUPS_BOUNDARY - raised)}"
     )
-    assert not other, f"silent divergence on duplicate keys: {other}"
-    assert len(ok) >= _expected_n(names) - len(DUPS_BOUNDARY)
+    assert not other, f"{_WHERE}: silent divergence on duplicate keys: {other}"
+    assert len(ok) >= _expected_n(names) - len(DUPS_BOUNDARY), _WHERE
 
 
 @pytest.fixture(scope="module")
@@ -536,5 +544,5 @@ def test_registry_on_timestamp_ties(spark, tsties_dir):
                                    "dedup_latest_events",
                                    "second_latest_before_cutoff"})
     ok, fails = deg_sweep.sweep(spark, tsties_dir, names=names, verbose=False)
-    assert not fails, fails
-    assert len(ok) >= _expected_n(names)
+    assert not fails, (_WHERE, fails)
+    assert len(ok) >= _expected_n(names), _WHERE

@@ -1062,6 +1062,37 @@ def test_upsert_partitioned_touches_only_batch_partitions(spark, tmp_path):
     }
     assert again == got
 
+    # String partition values that type inference would rewrite ("007" → 7)
+    # round-trip exactly even with the session's inference ON, and the
+    # upsert leaves that session setting as it found it.
+    conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        zpath = str(tmp_path / "zstore")
+        zbase = spark.createDataFrame(
+            [Row(k="a", d="007", v=1, seq=1), Row(k="a", d="010", v=2, seq=1)]
+        )
+        upsert_partitioned(spark, zpath, zbase, ["k", "d"], ["seq"], "d")
+        zbatch = spark.createDataFrame(
+            [Row(k="a", d="007", v=10, seq=2), Row(k="b", d="007", v=3, seq=1)]
+        )
+        assert upsert_partitioned(
+            spark, zpath, zbatch, ["k", "d"], ["seq"], "d"
+        ) == ["007"]
+        zgot = {
+            (r["k"], r["d"]): (r["v"], r["seq"])
+            for r in spark.read.schema(zbatch.schema).parquet(zpath).collect()
+        }
+        assert zgot == {
+            ("a", "007"): (10, 2),
+            ("b", "007"): (3, 1),
+            ("a", "010"): (2, 1),
+        }
+        assert spark.conf.get(conf) == "true"
+    finally:
+        spark.conf.set(conf, prev)
+
 
 def test_keyed_ewma_chunked_parity(spark):
     """The segment-fold EWMA (associative (A,B) chunk algebra) must agree

@@ -30,6 +30,26 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
     assert res["ok"], diff_report(name, res)
 
 
+# The iterative queries the benchmark's iterative_mix workload runs: each
+# launches Spark jobs while it is still building.
+ITERATIVE = (
+    "part_copurchase_ppr",
+    "nation_trade_pagerank",
+    "part_copurchase_bfs",
+    "orders_topk_retraction",
+    "part_copurchase_clustering",
+)
+
+
+@pytest.mark.parametrize("name", ITERATIVE)
+def test_build_and_run_leave_session_conf_unchanged(name, spark, sf_dir):
+    """Shuffle width and every other setting are the session's alone:
+    building a query and forcing it must not leave the conf changed."""
+    before = spark.conf.getAll
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert spark.conf.getAll == before
+
+
 def test_all_queries_run(spark, sf_dir):
     """Queries without an oracle still must run and have a stable schema."""
     for name, fn in QUERIES.items():

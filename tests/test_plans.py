@@ -434,41 +434,22 @@ def test_triangles_orientation_keyed_joins(spark, sf_dir):
     shared endpoint / the closing pair) — never a nested-loop over
     edges; the only BroadcastNestedLoop allowed is none.
 
-    Since round 18 the registered query passes ``wide_close=True``, which
-    EAGERLY materializes the per-node counts at query-build time (under a
-    temporarily widened shuffle conf), so the returned frame's plan is a
-    degree join over the checkpoint and no longer contains the closing
-    semi-join. The join-strategy pin therefore executes the SAME wedge
-    pipeline via the op's lazy path (``wide_close=False`` — identical plan
-    construction, the flag only changes when/at what width it runs) and
-    reads the AQE-final plan — the round-11 lesson: initial-plan lints
-    mislead under AQE (a "SortMergeJoin" in the pre-execution string ran
-    as broadcast all along)."""
-    plan = _plan(spark, sf_dir, "part_copurchase_clustering")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
-    # The wedge close must not SORT the Σ out-deg² wedge frame at
-    # RUNTIME: with the session's full AQE join ladder the final plan's
-    # closing semi-join is broadcast (edge set fits here) or shuffled
-    # hash (cluster regime) — never a surviving sort-merge. The edge
-    # build comes from the SAME helper the registered query uses
-    # (queries._copurchase_pair_edges), so this pin lints the real
-    # pipeline and cannot drift from it.
-    from fxspark.ops.graph import triangles_per_node
-    from fxspark.queries import _copurchase_pair_edges
-
-    df = triangles_per_node(_copurchase_pair_edges(spark, sf_dir))
+    Reads the registered query's AQE-final plan — the round-11 lesson:
+    initial-plan lints mislead under AQE (a "SortMergeJoin" in the
+    pre-execution string ran as broadcast all along)."""
+    df = QUERIES["part_copurchase_clustering"](spark, sf_dir)
     df.collect()
     full = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in full, full[:500]
     # The AQE plan string appends the superseded "== Initial Plan =="
     # section after the final plan — assert on the FINAL section only.
     final = full.split("== Initial Plan ==")[0]
-    # Global bans re-asserted on the WEDGE PIPELINE itself (the registered
-    # query's returned plan is the residual degree join over the eager
-    # checkpoint, so the file-level ban lint no longer sees this stage).
     assert "CartesianProduct" not in final, final[:3000]
     assert "BroadcastNestedLoopJoin" not in final, final[:3000]
+    # The wedge close must not SORT the Σ out-deg² wedge frame at
+    # RUNTIME: the final plan's closing semi-join is broadcast (edge set
+    # fits here) or shuffled hash (cluster regime) — never a surviving
+    # sort-merge.
     semi = [l for l in final.splitlines() if "Join" in l and "LeftSemi" in l]
     assert semi, final[:3000]
     assert all("SortMergeJoin" not in l for l in semi), semi

@@ -9,8 +9,6 @@ declared semantics (the optimization rounds' focused-test requirement).
 - simhash_codes / minhash signature expr-string construction == the values
   the Column-API form produced (pinned via a frozen reference vector, so a
   regression in the expr spelling can't hide behind both sides changing).
-- _spread_iteration_frame is a no-op when the frame already has >= cores
-  partitions (the 100 TB regime) and widens when narrower (bench regime).
 """
 from __future__ import annotations
 
@@ -147,23 +145,3 @@ def test_minhash_signature_expr_matches_python_replay(spark):
     expect = [min((a * x + b) % _MERSENNE_31 for x in xs) for a, b in perms]
     assert sig == expect
 
-
-def test_spread_iteration_frame_is_scale_adaptive(spark):
-    """Conf-driven (the frame always arrives off a shuffle, so the
-    shuffle-partitions conf IS its width): narrow regime widens to cores,
-    the >=-cores regime is an identity — and never probes df.rdd (which
-    would re-plan the caller's whole edge lineage)."""
-    from fxspark.ops.graph import _spread_iteration_frame
-
-    cores = spark.sparkContext.defaultParallelism
-    df = spark.range(1000)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(cores + 8))
-        assert _spread_iteration_frame(df) is df  # wide regime: no-op
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        out = _spread_iteration_frame(df)
-        assert out is not df
-        assert out.rdd.getNumPartitions() == cores
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)

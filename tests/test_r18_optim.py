@@ -1,9 +1,5 @@
 """Round-18 optimization pins.
 
-- spread_iterations is caller opt-in on both rank ops: values are identical
-  with and without it (it is a pure repartition), and the default path adds
-  no repartition for tiny graphs (the round-17 nation_trade_pagerank
-  regression class).
 - The Hilbert plan-template cache returns the SAME analyzed plan for a
   same-session, same-input rebuild (driver-overhead removal), misses on a
   different input frame, and never changes values.
@@ -13,62 +9,6 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def _rank_map(df):
-    return {r["node"]: round(r["rank"], 12) for r in df.collect()}
-
-
-def test_pagerank_spread_opt_in_is_value_identical(spark):
-    from fxspark.ops.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 1.0), ("a", "c", 3.0)],
-        "src string, dst string, w double",
-    )
-    base = _rank_map(pagerank(edges, weight="w", n_iter=6))
-    spread = _rank_map(
-        pagerank(edges, weight="w", n_iter=6, spread_iterations=True)
-    )
-    assert base == spread
-    assert base  # non-empty
-
-
-def test_ppr_spread_opt_in_is_value_identical(spark):
-    from fxspark.ops.graph import personalized_pagerank
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("b", "a")],
-        "src string, dst string",
-    )
-    seeds = spark.createDataFrame([("a",)], "node string")
-    base = _rank_map(personalized_pagerank(edges, seeds, n_iter=5))
-    spread = _rank_map(
-        personalized_pagerank(edges, seeds, n_iter=5, spread_iterations=True)
-    )
-    assert base == spread
-
-
-def test_triangles_wide_close_is_value_identical(spark):
-    from fxspark.ops.graph import triangles_per_node
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (2, 4), (4, 5), (2, 1)],
-        "src int, dst int",
-    )
-
-    def rows(df):
-        return sorted(
-            (r["node"], r["deg"], r["triangles"], round(r["clustering"], 12))
-            for r in df.collect()
-        )
-
-    base = rows(triangles_per_node(edges))
-    wide = rows(triangles_per_node(edges, wide_close=True))
-    assert base == wide
-    assert base  # non-empty
-    # the conf is restored after the widened materialization
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
 
 def test_hilbert_plan_cache_hits_and_misses(spark):

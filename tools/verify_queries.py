@@ -1,15 +1,15 @@
 #!/usr/bin/env python
 """Oracle-check specific queries: python tools/verify_queries.py <sf_dir> q1 q2 ..."""
-import hashlib
+import os
 import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
 
-def vhash(pdf):
-    cols = sorted(pdf.columns)
-    return hashlib.md5(repr(sorted(tuple(repr(v) for v in r)
-        for r in pdf[cols].itertuples(index=False, name=None))).encode()).hexdigest()
+from tests.oracle_diff import vhash  # noqa: E402
 
 
 def main():

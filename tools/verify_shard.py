@@ -6,16 +6,16 @@ Runs every registry query whose sorted index % n_shards == shard_idx against
 its DuckDB oracle (row count + order-insensitive value hash). Names listed in
 skip_file (one per line, already verified) are skipped.
 """
-import hashlib
+import os
 import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
 
-def vhash(pdf):
-    cols = sorted(pdf.columns)
-    return hashlib.md5(repr(sorted(tuple(repr(v) for v in r)
-        for r in pdf[cols].itertuples(index=False, name=None))).encode()).hexdigest()
+from tests.oracle_diff import vhash  # noqa: E402
 
 
 def main():
