@@ -711,6 +711,15 @@ def simhash64(col: Column, n: int = 1) -> Column:
     return out
 
 
+# dup_clusters is size-adaptive: near-dup graphs are tiny relative to the
+# corpus (edges exist only between near-duplicates), so up to this many pairs
+# the driver-side O(E α(E)) union-find beats O(diameter) distributed rounds
+# by the whole per-round scheduling cost. Above it, it falls through to label
+# propagation — the same adaptivity AQE applies to join strategies. The gate
+# counts RAW pairs (collected as-is; no symmetrized/self-loop expansion rows).
+SMALL_GRAPH_PAIRS = 2_000_000
+
+
 def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over a near-dup pair graph: (doc_id, cluster_id)
     where cluster_id is the smallest doc id reachable through pairs — the
@@ -729,13 +738,6 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     base = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).localCheckpoint()
-    # Size-adaptive: near-dup graphs are tiny relative to the corpus (edges
-    # exist only between near-duplicates), so below a driver-safe bound the
-    # O(E α(E)) union-find beats O(diameter) distributed rounds by the whole
-    # per-round scheduling cost. Above it, fall through to label propagation
-    # — the same adaptivity AQE applies to join strategies. The gate counts
-    # RAW pairs (collected as-is; no symmetrized/self-loop expansion rows).
-    SMALL_GRAPH_PAIRS = 2_000_000
     if base.count() <= SMALL_GRAPH_PAIRS:
         from pyspark.sql.types import StructField, StructType
 

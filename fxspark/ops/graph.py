@@ -1,12 +1,15 @@
 """Iterative graph algorithms as DataFrame loops.
 
 Connected components (dedup clustering) lives in ``ops/dedup.py``; this
-module holds the rank-propagation family. The driver unrolls a FIXED
-number of iterations — each is one join + one aggregation, and the frame
-is ``localCheckpoint``-ed between iterations so the lineage (and the plan
-Catalyst must optimize) stays O(1) instead of growing per iteration, the
-standard Spark iterative-algorithm discipline (same pattern as the
-label-propagation tier of ``ops/dedup.connected_components``).
+module holds the rank-propagation family. ``pagerank`` and
+``personalized_pagerank`` differ only in their teleport vector: both
+prepare edges with ``_share_edges`` and run the one rank loop,
+``_propagate``. The driver unrolls a FIXED number of iterations — each is
+one join + one aggregation, and the frame is ``localCheckpoint``-ed
+between iterations so the lineage (and the plan Catalyst must optimize)
+stays O(1) instead of growing per iteration, the standard Spark
+iterative-algorithm discipline (same pattern as the label-propagation
+tier of ``ops/dedup.dup_clusters``).
 
 Determinism: the per-node contribution sum is decimal-exact (cast to
 DECIMAL(38,18), summed, cast back), so the result is bit-identical across
@@ -24,32 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str | None = None,
-    n_iter: int = 5,
-    damping: float = 0.85,
+def _share_edges(
+    edges: DataFrame, src: str, dst: str, weight: str | None
 ) -> DataFrame:
-    """Weighted PageRank, ``n_iter`` synchronous iterations.
-
-    ``rank_{i+1}(v) = (1-d)/N + d * sum_{(u,v) in E} rank_i(u) * w(u,v) / out(u)``
-
-    Nodes are the union of sources and destinations; dangling nodes (no
-    out-edges) keep contributing nothing (their mass leaks — the simple
-    variant, stated so the oracle can replay it). Every iteration is one
-    shuffle on ``dst`` plus a broadcast-sized rank join; at scale the edge
-    list is the big side and stays partitioned by ``src`` across
-    iterations, so only the (N-row) rank frame moves.
-
-    A NULL endpoint is not a node: edges with a NULL src or dst (or a
-    NULL/zero out-weight share) are dropped explicitly — previously they
-    fell out incidentally at the out-weight equi-join, which is Spark
-    join semantics, not a declared contract.
-
-    Returns (node, rank) with rank a raw double — round at the query edge.
-    """
+    """(_src, _dst, _share) under :func:`pagerank`'s NULL contract,
+    checkpointed once because every iteration joins it."""
     w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"), w_col.alias("_w")
@@ -58,28 +40,32 @@ def pagerank(
         & F.col("_w").isNotNull()
     )
     out = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
-    # Edge frame with precomputed out-weight share: reused every iteration —
-    # materialize once so the join/agg per iteration reads a checkpoint, not
-    # the full upstream lineage.
     e = e.join(out, "_src").withColumn("_share", F.col("_w") / F.col("_out"))
-    e = e.select("_src", "_dst", "_share").localCheckpoint()
-    nodes = (
-        e.select(F.col("_src").alias("node"))
-        .union(e.select(F.col("_dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        # EMPTY edge list ⇒ empty node set ⇒ empty rank frame — the SQL
-        # oracles' iteration over zero nodes yields zero rows too
-        # (round-14 sf_empty registry sweep; 1/N below would divide by 0).
-        return nodes.withColumn("rank", F.lit(0.0))
-    teleport = (1.0 - damping) / n_nodes
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
+    return e.select("_src", "_dst", "_share").localCheckpoint()
+
+
+def _propagate(
+    e: DataFrame,
+    nodes: DataFrame,
+    n_iter: int,
+    damping: float,
+    prune_eps: float | None = None,
+) -> DataFrame:
+    """The rank loop of both rank ops: ``n_iter`` synchronous steps of
+    ``rank(v) = _base(v) + d·in(v)``, ``in(v) = Σ rank(u)·share(u,v)`` over
+    ``e`` (from :func:`_share_edges`). ``nodes`` carries
+    ``(node, _base, rank)``, ``rank`` holding the starting ranks. With
+    ``prune_eps`` set, only nodes ranked at least ``prune_eps`` contribute.
+    Returns (node, rank)."""
+    ranks = nodes.select("node", "rank")
     for _ in range(n_iter):
+        frontier = (
+            ranks.filter(F.col("rank") >= prune_eps)
+            if prune_eps is not None
+            else ranks
+        )
         contrib = (
-            e.join(F.broadcast(ranks), e["_src"] == ranks["node"])
+            e.join(F.broadcast(frontier), e["_src"] == frontier["node"])
             .select(
                 F.col("_dst").alias("node"),
                 (F.col("rank") * F.col("_share")).alias("_c"),
@@ -96,13 +82,63 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(teleport)
+                    F.col("_base")
                     + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
                 ).alias("rank"),
             )
             .localCheckpoint()
         )
     return ranks
+
+
+def pagerank(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    weight: str | None = None,
+    n_iter: int = 5,
+    damping: float = 0.85,
+) -> DataFrame:
+    """Weighted PageRank, ``n_iter`` synchronous iterations.
+
+    Both rank ops of this module run one recurrence from ``rank_0 = p``:
+
+    ``rank_{i+1}(v) = (1-d)·p(v) + d·Σ_{(u,v)∈E} rank_i(u)·w(u,v)/out(u)``
+
+    Here the teleport vector is uniform, ``p(v) = 1/N``;
+    :func:`personalized_pagerank` puts it on a source set. The contract
+    both keep:
+
+    - Nodes are the union of sources and destinations. A NULL endpoint is
+      not a node: edges with a NULL src, dst or weight are dropped
+      explicitly, not left to fall out at the out-weight equi-join.
+    - Dangling nodes (no out-edges) contribute nothing: their mass leaks
+      (the simple variant, stated so the oracle can replay it).
+    - Every iteration is one shuffle on ``dst`` plus a broadcast-sized rank
+      join; at scale the edge list is the big side and stays partitioned
+      by ``src`` across iterations, so only the (N-row) rank frame moves.
+
+    Returns (node, rank) with rank a raw double — round at the query edge.
+    """
+    e = _share_edges(edges, src, dst, weight)
+    nodes = (
+        e.select(F.col("_src").alias("node"))
+        .union(e.select(F.col("_dst").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
+    n_nodes = nodes.count()
+    if n_nodes == 0:
+        # EMPTY edge list ⇒ empty node set ⇒ empty rank frame — the SQL
+        # oracles' iteration over zero nodes yields zero rows too
+        # (round-14 sf_empty registry sweep; 1/N below would divide by 0).
+        return nodes.withColumn("rank", F.lit(0.0))
+    nodes = nodes.select(
+        "node",
+        F.lit((1.0 - damping) / n_nodes).alias("_base"),
+        F.lit(1.0 / n_nodes).alias("rank"),
+    )
+    return _propagate(e, nodes, n_iter, damping)
 
 
 def bfs_hops(
@@ -359,19 +395,13 @@ def personalized_pagerank(
     prune_eps: float | None = None,
     nodes: DataFrame | None = None,
 ) -> DataFrame:
-    """Personalized PageRank: identical recurrence to :func:`pagerank`
-    except the teleport mass returns to a SOURCE SET instead of spreading
-    uniformly — ``rank_{i+1}(v) = (1-d)·p(v) + d·Σ rank_i(u)·share(u,v)``
-    with ``p(v) = 1/|S|`` on the personalization set S (``sources``, one
-    column named ``node``) and 0 elsewhere; ``rank_0 = p``. The
-    "related items" primitive: mass diffuses outward from S through the
-    co-occurrence graph, so high-rank nodes are S's graph neighborhood
-    weighted by connectivity, not global popularity.
-
-    Same topology and determinism contract as :func:`pagerank`
-    (localCheckpointed O(1) lineage, decimal-exact contribution sums,
-    dangling mass leaks by declaration); ``sources`` is broadcast-sized.
-    Nodes unreachable from S keep rank exactly 0.0.
+    """Personalized PageRank: :func:`pagerank`'s recurrence and contract
+    with the teleport vector on a SOURCE SET — ``p(v) = 1/|S|`` on the
+    personalization set S (``sources``, one column named ``node``,
+    broadcast-sized) and 0 elsewhere. The "related items" primitive: mass
+    diffuses outward from S through the co-occurrence graph, so high-rank
+    nodes are S's graph neighborhood weighted by connectivity, not global
+    popularity. Nodes unreachable from S keep rank exactly 0.0.
 
     ``prune_eps`` enables the FRONTIER-PRUNED scale form (the
     synchronous cousin of Forward Push / Andersen-Chung-Lang local
@@ -389,25 +419,13 @@ def personalized_pagerank(
     always pruned, which is pure savings with zero error.
 
     ``nodes``: optional one-column frame that must equal EXACTLY the
-    union of edge endpoints (a superset would add spurious rank-0 rows;
-    a subset silently drops reachable nodes). Callers that already hold
-    that set (e.g. off the same checkpointed edge aggregate) pass it in
-    to skip this op's full-edge-list distinct; when in doubt, leave it
-    None and let the op derive it.
+    union of edge endpoints under the NULL contract (a superset would add
+    spurious rank-0 rows; a subset silently drops reachable nodes).
+    Callers that already hold that set (e.g. off the same checkpointed
+    edge aggregate) pass it in to skip this op's full-edge-list distinct;
+    when in doubt, leave it None and let the op derive it.
     """
-    w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
-    e = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst"), w_col.alias("_w")
-    )
-    out = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
-    e = e.join(out, "_src").withColumn("_share", F.col("_w") / F.col("_out"))
-    e = e.select("_src", "_dst", "_share").localCheckpoint()
-    # ``nodes``: caller-supplied node frame (one column, exactly the union
-    # of edge endpoints — the callers that pass it derive it from the SAME
-    # checkpointed edge aggregate). Skips this op's full-edge-list distinct,
-    # which the registered PPR queries were otherwise paying twice: once
-    # here and once caller-side for the seed semi-join (round-17 phase
-    # profile: ~1 s each at sf0.1 under the bench regime).
+    e = _share_edges(edges, src, dst, weight)
     if nodes is None:
         nodes = (
             e.select(F.col("_src").alias("node"))
@@ -425,43 +443,16 @@ def personalized_pagerank(
         # below would divide by 0).
         return nodes.withColumn("rank", F.lit(0.0)).limit(0)
     p = 1.0 / n_src
+    tele = F.coalesce(F.col("_tele"), F.lit(0.0))
     nodes = (
         nodes.join(
             F.broadcast(s.withColumn("_tele", F.lit(p))), "node", "left"
         )
-        .select("node", F.coalesce(F.col("_tele"), F.lit(0.0)).alias("_tele"))
+        .select(
+            "node",
+            (F.lit(1.0 - damping) * tele).alias("_base"),
+            tele.alias("rank"),
+        )
         .localCheckpoint()
     )
-    ranks = nodes.select("node", F.col("_tele").alias("rank"))
-    for _ in range(n_iter):
-        frontier = (
-            ranks.filter(F.col("rank") >= prune_eps)
-            if prune_eps is not None
-            else ranks
-        )
-        contrib = (
-            e.join(F.broadcast(frontier), e["_src"] == frontier["node"])
-            .select(
-                F.col("_dst").alias("node"),
-                (F.col("rank") * F.col("_share")).alias("_c"),
-            )
-            .groupBy("node")
-            .agg(
-                F.sum(F.col("_c").cast("decimal(38,18)"))
-                .cast("double")
-                .alias("_in"),
-            )
-        )
-        ranks = (
-            nodes.join(F.broadcast(contrib), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("_tele")
-                    + F.lit(damping)
-                    * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
+    return _propagate(e, nodes, n_iter, damping, prune_eps)

@@ -171,29 +171,6 @@ def largest_remainder_quota(
     )
 
 
-# Plan-template cache for the Hilbert walk: (out_col, bits, x, y, columns) →
-# (input frame, walk frame). The walk is ``bits`` chained withColumns and
-# every PySpark transformation eagerly ANALYZES its growing plan (Dataset
-# construction asserts analysis), so the chain costs O(bits²) Catalyst
-# analysis per build — measured ~1.3 s at bits=16 (round 17; the one-shot
-# SQL rewrite that avoided it optimized worse end-to-end and was rejected).
-# The walk is a PURE projection chain — no checkpoint, no materialization,
-# no data — so caching the built frame caches only the analyzed plan
-# template, never results (the _TABLE_CACHE discipline; VERDICT r17
-# next-round item 4 sanctions exactly this shape). A hit requires the same
-# owning session AND ``sameResult`` on the input's analyzed plan, so a
-# different sf_dir, a rebuilt fixture, or another session misses.
-#
-# LINEAGE CONTRACT for callers: a hit returns a frame built over an EARLIER
-# plan-equal input, so the result's attribute ids do not belong to the
-# caller's own `df` object. Downstream code must reference the result's
-# columns BY NAME (F.col / string refs) — passing `df["x"]` attribute refs
-# from the caller's input into filters/joins over the returned frame would
-# raise a missing-attribute AnalysisException on cache hits. Every in-repo
-# caller is name-based (pinned by the round-18 cache tests).
-_HILBERT_PLAN_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def hilbert_layout_index(
     df: DataFrame,
     x_col: Column,
@@ -217,53 +194,34 @@ def hilbert_layout_index(
     mod arithmetic. Catalyst fuses the chain into one whole-stage-codegen
     map — no UDF, no shuffle; ``hilbert_sql_ctes`` emits the identical
     walk as a SQL CTE chain so the layout decision stays oracle-checkable
-    bit-for-bit. Repeat builds over the same input reuse the analyzed
-    plan via ``_HILBERT_PLAN_CACHE`` (see note above — on a hit the
-    result's lineage roots in an earlier plan-equal input, so consumers
-    must reference its columns by NAME, never by the caller's own
-    attribute refs)."""
-    key = (out_col, bits, str(x_col), str(y_col), tuple(df.columns))
-    hit = _HILBERT_PLAN_CACHE.get(key)
-    if hit is not None:
-        prev_in, prev_out = hit
-        try:
-            if prev_in.sparkSession is df.sparkSession and prev_in._jdf.queryExecution().analyzed().sameResult(
-                df._jdf.queryExecution().analyzed()
-            ):
-                return prev_out
-        except Exception:  # noqa: BLE001 — a dead cached session must
-            _HILBERT_PLAN_CACHE.pop(key, None)  # never fail the rebuild
-    df_in = df
+    bit-for-bit. Each level is one ``withColumns`` of three ``F.expr``
+    strings, not a nested py4j ``Column`` tree: at bits=16 that cuts the
+    driver-side build from 1.6 s to 0.6 s (local[1], 4-vCPU VM)."""
     n = 2**bits
     df = (
         df.withColumn("_hx", x_col.cast("long"))
         .withColumn("_hy", y_col.cast("long"))
         .withColumn(out_col, F.lit(0).cast("long"))
     )
+    d_ref = "`" + out_col.replace("`", "``") + "`"
     for k in range(bits - 1, -1, -1):
         s = 2**k
-        rx = F.floor(F.col("_hx") / F.lit(float(s))).cast("long") % 2
-        ry = F.floor(F.col("_hy") / F.lit(float(s))).cast("long") % 2
-        q = F.lit(3) * rx + (F.lit(1) - F.lit(2) * rx) * ry
-        d = F.col(out_col) + F.lit(s * s) * q
-        nx = F.when(
-            ry == 0,
-            F.when(rx == 1, F.lit(n - 1) - F.col("_hy")).otherwise(
-                F.col("_hy")
+        rx = f"(CAST(floor(_hx / {float(s)}D) AS BIGINT) % 2)"
+        ry = f"(CAST(floor(_hy / {float(s)}D) AS BIGINT) % 2)"
+        df = df.withColumns({
+            out_col: F.expr(
+                f"{d_ref} + {s * s} * (3 * {rx} + (1 - 2 * {rx}) * {ry})"
             ),
-        ).otherwise(F.col("_hx"))
-        ny = F.when(
-            ry == 0,
-            F.when(rx == 1, F.lit(n - 1) - F.col("_hx")).otherwise(
-                F.col("_hx")
+            "_hx": F.expr(
+                f"CASE WHEN {ry} = 0 THEN CASE WHEN {rx} = 1"
+                f" THEN {n - 1} - _hy ELSE _hy END ELSE _hx END"
             ),
-        ).otherwise(F.col("_hy"))
-        df = df.withColumns({out_col: d, "_hx": nx, "_hy": ny})
-    out = df.drop("_hx", "_hy")
-    if len(_HILBERT_PLAN_CACHE) > 64:  # bound growth across fixture sweeps
-        _HILBERT_PLAN_CACHE.clear()
-    _HILBERT_PLAN_CACHE[key] = (df_in, out)
-    return out
+            "_hy": F.expr(
+                f"CASE WHEN {ry} = 0 THEN CASE WHEN {rx} = 1"
+                f" THEN {n - 1} - _hx ELSE _hx END ELSE _hy END"
+            ),
+        })
+    return df.drop("_hx", "_hy")
 
 
 def hilbert_sql_ctes(

@@ -110,10 +110,11 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
 # and oracle runs always recompute (optimization-round contract). It is the
 # DataFrame analogue of a catalog's table registration: without it every
 # load_table call re-lists the file, re-reads the footer schema, and re-runs
-# the nanos/NTZ normalization analysis — measured 98 ms/call warm at sf0.1,
-# ~600 scan sites across the 249-query registry ≈ tens of seconds per sweep
-# of pure driver-side metadata work (OPTIMIZATION_r17.md, guide §7.3: the
-# driver should do almost no data work — including repeated planning).
+# the nanos/NTZ normalization analysis — measured 131 ms per miss against
+# 0.9 ms per hit (events, sf0.001, local[1] on a 4-vCPU VM, median of 48),
+# with ~600 scan sites across the 249-query registry ≈ over a minute per
+# sweep of pure driver-side metadata work (the driver should do almost no
+# data work — including repeated planning).
 #
 # Safety: the key carries the file mtime (a rebuilt fixture at the same path
 # misses), and the value carries the owning session (a different session —

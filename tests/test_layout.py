@@ -87,3 +87,22 @@ def test_hilbert_layout_tightens_bounding_boxes(spark):
     spans = sorted((r["hlo"], r["hhi"]) for r in parts if r["n"] > 0)
     for (l1, h1), (l2, h2) in zip(spans, spans[1:]):
         assert h1 < l2, (spans,)
+
+
+def test_hilbert_index_resolves_the_callers_own_attribute_refs(spark):
+    """Two plan-equal inputs each get a walk rooted in their own lineage:
+    the second result filters by the second input's attribute ref and
+    gives the same rows as the first."""
+    from fxspark.ops.layout import hilbert_layout_index
+
+    def grid():
+        return spark.range(100).select(
+            (F.col("id") % 16).alias("x"), (F.col("id") % 7).alias("y")
+        )
+
+    df1, df2 = grid(), grid()
+    out1 = hilbert_layout_index(df1, F.col("x"), F.col("y"), "hd", bits=4)
+    out2 = hilbert_layout_index(df2, F.col("x"), F.col("y"), "hd", bits=4)
+    got = sorted(tuple(r) for r in out2.filter(df2["x"] >= 0).collect())
+    assert got == sorted(tuple(r) for r in out1.collect())
+    assert len(got) == 100

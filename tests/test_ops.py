@@ -548,6 +548,27 @@ def test_dup_clusters_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
+def test_dup_clusters_label_propagation_matches_union_find(spark, monkeypatch):
+    """Above the size gate dup_clusters runs distributed label propagation;
+    with the gate at 0 both fixtures above take that path and must give
+    the union-find path's (doc_id, cluster_id)."""
+    from fxspark.ops import dedup
+
+    fixtures = [
+        [Row(id_a=2, id_b=3), Row(id_a=1, id_b=2), Row(id_a=9, id_b=7)],
+        [Row(id_a="b", id_b="c"), Row(id_a="a", id_b="b"), Row(id_a="x", id_b="y")],
+    ]
+
+    def clusters(rows):
+        out = dedup.dup_clusters(spark.createDataFrame(rows))
+        return sorted((r["doc_id"], r["cluster_id"]) for r in out.collect())
+
+    union_find = [clusters(rows) for rows in fixtures]
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_PAIRS", 0)
+    assert [clusters(rows) for rows in fixtures] == union_find
+    assert union_find[0] == [(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)]
+
+
 def test_compact_idempotent_rerun(spark, tmp_path, sf_dir):
     """A second compact over the same path succeeds (stale .old residue must
     not wedge the swap)."""

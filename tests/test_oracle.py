@@ -10,7 +10,9 @@ from __future__ import annotations
 import pytest
 
 from fxspark.queries import ORACLE, QUERIES
-from tests.oracle_diff import compare, diff_report, duck_connect, run_oracle
+from tests.oracle_diff import (
+    compare, diff_report, duck_connect, run_oracle, vhash,
+)
 
 ORACLED = sorted(ORACLE.keys())
 
@@ -48,6 +50,17 @@ def test_build_and_run_leave_session_conf_unchanged(name, spark, sf_dir):
     before = spark.conf.getAll
     QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
     assert spark.conf.getAll == before
+
+
+@pytest.mark.parametrize("name", ITERATIVE + ("events_hilbert_stats",))
+def test_result_same_with_warm_and_cold_table_cache(name, spark, sf_dir):
+    """A build with load_table's cache cleared and a rebuild whose loads
+    all hit the cache give the same result."""
+    from fxspark import session
+
+    session._TABLE_CACHE.clear()
+    cold = vhash(QUERIES[name](spark, sf_dir).toPandas())
+    assert vhash(QUERIES[name](spark, sf_dir).toPandas()) == cold
 
 
 def test_all_queries_run(spark, sf_dir):

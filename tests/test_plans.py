@@ -566,7 +566,7 @@ def test_ppr_topk_emission_is_topk_cut(spark, sf_dir):
     (never a global sort of all ranks) and CartesianProduct-free. The
     frontier filter itself lives between per-iteration localCheckpoints
     (invisible in any returned frame's plan); its BEHAVIOR is pinned by
-    tests/test_round10_ops.py::test_ppr_prune_eps_is_lower_bound_and_tiny_eps_exact."""
+    tests/test_graph.py::test_ppr_prune_eps_is_lower_bound_and_tiny_eps_exact."""
     plan = _plan(spark, sf_dir, "part_copurchase_ppr_topk")
     assert "TakeOrderedAndProject" in plan, plan[:2000]
     assert "CartesianProduct" not in plan

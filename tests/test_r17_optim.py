@@ -4,8 +4,6 @@ declared semantics (the optimization rounds' focused-test requirement).
 - zvalue's parallel bit-spread == the unrolled floor-div Morton reference
   on the full contract domain (non-negative ints < 2^bits), including the
   bits=32 widest case the spread masks must cover.
-- bfs_hops(assume_distinct=True) over a mirrored canonical distinct ==
-  the default dedup path.
 - simhash_codes / minhash signature expr-string construction == the values
   the Column-API form produced (pinned via a frozen reference vector, so a
   regression in the expr spelling can't hide behind both sides changing).
@@ -45,33 +43,6 @@ def test_zvalue_bitspread_matches_floor_div_reference(spark):
     for bad_bits in (32, 33):
         with pytest.raises(ValueError):
             zvalue(F.col("a"), F.col("b"), bad_bits)
-
-
-def test_bfs_assume_distinct_equivalent(spark):
-    from fxspark.ops.graph import bfs_hops
-
-    e0 = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (2, 5), (1, 2), (5, 6)], "src long, dst long"
-    )
-    mirrored = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    canonical = e0.distinct()
-    canonical_mirrored = canonical.unionByName(
-        canonical.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    seeds = spark.createDataFrame([(1,)], "node long")
-    base = sorted(
-        (r["node"], r["hops"])
-        for r in bfs_hops(mirrored, seeds, max_hops=3).collect()
-    )
-    fast = sorted(
-        (r["node"], r["hops"])
-        for r in bfs_hops(
-            canonical_mirrored, seeds, max_hops=3, assume_distinct=True
-        ).collect()
-    )
-    assert base == fast and base[0] == (1, 0)
 
 
 def test_simhash_codes_expr_reference_vector(spark):

@@ -1,8 +1,8 @@
-"""Round-10 operator properties: DOULION edge sampling, frontier-pruned
-PPR, and pins for the round-9 ADVICE fixes (topk_retraction emission
-order + alive_at convention, theil degenerate-scale guard, stateful_topk
-column parameterization). The sf0.01 DuckDB differential is the
-correctness gate; these pin the properties the oracles can't express."""
+"""Round-10 operator properties: DOULION edge sampling and pins for the
+round-9 ADVICE fixes (topk_retraction emission order + alive_at
+convention, theil degenerate-scale guard, stateful_topk column
+parameterization). The sf0.01 DuckDB differential is the correctness
+gate; these pin the properties the oracles can't express."""
 
 from __future__ import annotations
 
@@ -56,52 +56,6 @@ def test_doulion_pct100_equals_exact_triangles(spark):
     assert len(out) == k
     for r in out:
         assert r.triangles == 21 and r.deg == k - 1
-
-
-# ---------------------------------------------------------------------------
-# Frontier-pruned personalized PageRank
-# ---------------------------------------------------------------------------
-
-
-def _ppr_fixture(spark):
-    # path graph 0-1-2-3-4 plus a hub 0-5, symmetrized
-    und = [(0, 1), (1, 2), (2, 3), (3, 4), (0, 5)]
-    edges = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src long, dst long"
-    )
-    sources = spark.createDataFrame([(0,)], "node long")
-    return edges, sources
-
-
-def test_ppr_prune_eps_is_lower_bound_and_tiny_eps_exact(spark):
-    from fxspark.ops.graph import personalized_pagerank
-
-    edges, sources = _ppr_fixture(spark)
-    exact = {
-        r.node: r.rank
-        for r in personalized_pagerank(edges, sources, n_iter=4).collect()
-    }
-    # eps below any reachable rank ⇒ only exact-zero ranks pruned ⇒ equal
-    tiny = {
-        r.node: r.rank
-        for r in personalized_pagerank(
-            edges, sources, n_iter=4, prune_eps=1e-300
-        ).collect()
-    }
-    assert tiny == exact
-    # aggressive eps ⇒ every rank is a LOWER bound (pruning removes only
-    # non-negative contribution mass)
-    pruned = {
-        r.node: r.rank
-        for r in personalized_pagerank(
-            edges, sources, n_iter=4, prune_eps=0.05
-        ).collect()
-    }
-    assert set(pruned) == set(exact)
-    for node, rank in pruned.items():
-        assert rank <= exact[node] + 1e-12, node
-    # and the aggressive prune actually bit somewhere on this graph
-    assert any(pruned[n] < exact[n] - 1e-12 for n in exact)
 
 
 # ---------------------------------------------------------------------------

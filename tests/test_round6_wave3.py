@@ -1,5 +1,5 @@
 """Round-6 third-wave operators: nearest-in-time join, gaps-and-islands
-streaks, bounded k-smallest-per-key, Z-set aggregate maintenance, BFS."""
+streaks, bounded k-smallest-per-key, Z-set aggregate maintenance."""
 
 from __future__ import annotations
 
@@ -158,29 +158,6 @@ def test_delta_agg_matches_recompute_and_drops_retracted_key(spark):
     assert out["a"]["n_rows"] == 3 and float(out["a"]["v"]) == 60.0
     assert out["b"]["n_rows"] == 1 and float(out["b"]["v"]) == 5.0
     assert out["d"]["n_rows"] == 1 and float(out["d"]["v"]) == 7.0
-
-
-def test_bfs_hops_distances_and_unreachable(spark):
-    from fxspark.ops.graph import bfs_hops
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")],
-        "src string, dst string",
-    )
-    seeds = spark.createDataFrame([("a",)], "node string")
-    out = {r["node"]: r["hops"] for r in bfs_hops(edges, seeds, max_hops=5).collect()}
-    assert out == {"a": 0, "b": 1, "c": 2, "d": 3}  # x,y unreachable -> absent
-
-
-def test_bfs_hops_respects_max_hops(spark):
-    from fxspark.ops.graph import bfs_hops
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
-    )
-    seeds = spark.createDataFrame([("a",)], "node string")
-    out = {r["node"]: r["hops"] for r in bfs_hops(edges, seeds, max_hops=2).collect()}
-    assert out == {"a": 0, "b": 1, "c": 2}
 
 
 def test_containment_pairs_finds_partial_copy(spark):
