@@ -674,47 +674,6 @@ def main() -> None:
         f"quantile_weighted_{qb_rows // 1000}k", qb_weighted_run, ext_timings
     )
 
-    # Grouped-binning A/B (the few-large-groups trap, VERDICT r6 item 2):
-    # deciles within 2 groups — quantile_bins_grouped (all stages keyed,
-    # per-group prefix windows see <= coarse_buckets rows) against ntile
-    # PARTITION BY group, where each group's whole frame serializes
-    # through ONE window task (2 tasks total on 32 cores). The crossover
-    # needs per-group frames past what one task sorts comfortably, so the
-    # probe is EXPENSIVE (~45 s at 16M rows: bins 20.5 s vs ntile 44.7 s
-    # = 2.2x; at 6M: 9.5 vs 14.0 = 1.5x; at 1M rows/group the partitioned
-    # sort still wins — measured 2026-08-14) and ships OFF by default.
-    # Enable with FXSPARK_BENCH_GROUPED_QB_ROWS=16000000.
-    gqb_rows = int(os.environ.get("FXSPARK_BENCH_GROUPED_QB_ROWS", "0"))
-    if gqb_rows > 0:
-        from fxspark.ops.quantile import quantile_bins_grouped
-
-        gcloud = spark.range(gqb_rows).select(
-            SF.col("id"),
-            SF.pmod(SF.col("id"), SF.lit(2)).alias("grp"),
-            SF.pmod(
-                SF.col("id") * 2654435761, SF.lit(1_000_000_000)
-            ).alias("x"),
-        )
-
-        def qb_grouped_run():
-            quantile_bins_grouped(
-                gcloud, ["grp"], "x", 10, "d"
-            ).write.format("noop").mode("overwrite").save()
-
-        def qb_grouped_ntile_run():
-            gcloud.withColumn(
-                "d", SF.ntile(10).over(W.partitionBy("grp").orderBy("x"))
-            ).write.format("noop").mode("overwrite").save()
-
-        for label, fn in (
-            (f"quantile_grouped_{gqb_rows // 1000}k", qb_grouped_run),
-            (
-                f"quantile_grouped_ntile_{gqb_rows // 1000}k",
-                qb_grouped_ntile_run,
-            ),
-        ):
-            probe_timed(label, fn, ext_timings)
-
     # Skew-stress A/B (VERDICT r2 #6): one hot key owns half the fact rows —
     # the distribution where a plain shuffle join melts one task. Broadcast
     # is disabled for BOTH runs (the dim fits under the threshold, which

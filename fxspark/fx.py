@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fxspark.ops.asof import nth_before_cutoff
-from fxspark.ops.change import pct_change, pct_change_label
+from fxspark.ops.change import pct_change_label
 from fxspark.ops.latest import latest_per_key_agg
 from fxspark.ops.windows import active_window
 
@@ -105,11 +105,6 @@ def rate_change_report(
             F.col("previous_rate").cast("double"),
         ).alias("percentage_change"),
     )
-
-
-def rate_change_pct(cur: F.Column, prev: F.Column) -> F.Column:
-    """Raw numeric percentage change (unformatted variant)."""
-    return pct_change(cur, prev)
 
 
 # The reference query as Spark SQL text (Q1 CTE chaining, `Fx_1min.py:147-217`)

@@ -4,26 +4,37 @@
 pattern (RFM, deciles, quartile bands) and the classic Spark scale trap: an
 un-partitioned window serializes the whole frame through one task. This
 module provides the declared-semantics replacement promised by the
-``customer_decile_bands`` / ``customer_spend_quartiles`` docstrings:
+``customer_decile_bands`` / ``customer_spend_quartiles`` docstrings.
 
-1. one global aggregate gets ``(min, max, count)`` of the bin column;
+One keyed core, :func:`_boundaries`, computes every boundary array, and one
+labeler, :func:`_bucket`, bins every row; the four public binners only
+prepare the core's input. That input carries ``keys + [_qv, _qw]`` — the
+value and its positive integer weight (``_qw = 1`` for plain ranks) — and
+the core runs these stages per key:
+
+1. one aggregate gets ``(min, max, Σw)`` of the values;
 2. rows map to <= ``coarse_buckets`` fixed-width coarse buckets (double
    arithmetic — monotone non-decreasing in x, the only invariant needed,
    same reasoning as ``ops/skyline.skyline2d``);
-3. the per-bucket histogram (<= coarse_buckets rows) is prefix-summed by a
-   bounded-grain window, locating for each target rank
-   ``k_i = ceil(c * i / n)`` the bucket that contains it and the rank
+3. the per-bucket weight histogram (<= coarse_buckets rows per key) is
+   prefix-summed by a window partitioned by the keys — with no keys, a
+   bounded-grain global window;
+4. each target rank ``k_i = ceil(W * i / n)`` (exact long arithmetic,
+   ``(W*i + n - 1) div n``) locates the bucket that holds it and the rank
    offset within that bucket;
-4. only the rows of the (n-1) containing buckets are ranked — a window
-   PARTITIONED by bucket over ~``(n-1)/coarse_buckets`` of the data — and
-   the exact k-th smallest values become the boundary array;
-5. the boundary array is broadcast and every row is binned MAP-SIDE:
-   ``bucket = 1 + #{boundaries < x}``.
+5. only the rows of those buckets are read again: a ROWS-frame running
+   weight sum per (keys, bucket, target), ordered by value, keeps the one
+   CROSSING row, ``cw >= k > cw - w``. With unit weights that is the row
+   at rank k; with positive weights it is the smallest value whose
+   cumulative weight reaches k — every row of a tie carries the same value,
+   so intra-tie row order never moves the boundary;
+6. each key's boundaries become one sorted array.
 
-The whole thing is lazy (no driver collect): boundaries travel as a 1-row
-broadcast frame. Cost at any scale: one tiny histogram shuffle + one
-shuffle of the boundary-bucket rows (a ~(n-1)/coarse_buckets fraction of
-the input) + a map-side bin pass. Never a global sort.
+The labeler bins MAP-SIDE against that array: ``bucket = 1 + #{b < x}``.
+The whole thing is lazy (no driver collect). Cost at any scale: one tiny
+histogram shuffle + one shuffle of the boundary-bucket rows (a
+~(n-1)/coarse_buckets fraction of the input) + a map-side bin pass. Never a
+global sort.
 
 DECLARED SEMANTICS (differs from ntile exactly at ties): boundary ``b_i``
 is the value at ascending rank ``ceil(c*i/n)`` (type-1 empirical quantile);
@@ -36,51 +47,32 @@ compute the identical rank-based boundaries, so the differential is exact.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# quantile_bins_multi compares every dimension in this one type: it holds
+# ints, longs and sub-scale decimals exactly (never route doubles through it)
+_MULTI_TYPE = "decimal(38,6)"
 
-def quantile_bins(
-    df: DataFrame,
-    col: str,
-    n: int,
-    out_col: str,
-    descending: bool = False,
-    coarse_buckets: int = 1024,
-    boundary_frame: DataFrame | None = None,
+
+def _boundaries(
+    vals: DataFrame,
+    keys: list[str],
+    n: Column,
+    coarse_buckets: int,
+    hint: Callable[[DataFrame], DataFrame] = F.broadcast,
 ) -> DataFrame:
-    """Add ``out_col`` = exact quantile bucket (1..n) of ``col``.
-
-    ``descending=True`` labels bucket 1 as the LARGEST values (the
-    ``ntile(n) OVER (ORDER BY x DESC)`` reading) by relabeling
-    ``n + 1 - ascending_bucket``; the boundary math is shared.
-
-    The caller should pass a frame whose lineage is cheap to re-evaluate
-    (aggregate output, or ``localCheckpoint(eager=False)`` it): the bin
-    column frame is scanned by the stats/histogram/extraction stages and
-    again by the final bin pass.
-
-    ``boundary_frame``: compute boundaries from THIS frame (must hold the
-    same rows of ``col`` as ``df``) instead of ``df`` itself. Chained
-    multi-dimension binning (RFM) passes the shared base here so each
-    call's boundary subtree hangs off the base, keeping the composed plan
-    LINEAR in the number of dimensions — boundaries computed against the
-    running output would re-embed every earlier call's subtree a dozen
-    times over.
-    """
-    x = F.col(col)
-    src = boundary_frame if boundary_frame is not None else df
-    vals = src.filter(x.isNotNull()).select(x.alias("_qv"))
-
-    stats = vals.agg(
+    """``(keys..., _qbs)``: each key's sorted boundary array (stages 1-6 of
+    the module docstring). ``n`` is a Column over ``keys``, so each key may
+    ask for its own bin count; ``hint`` wraps the small per-key frames
+    (stats, target ranks, located targets) on their joins."""
+    stats = vals.groupBy(*keys).agg(
         F.min("_qv").cast("double").alias("_qlo"),
         F.max("_qv").cast("double").alias("_qhi"),
-        F.count(F.lit(1)).alias("_qc"),
+        F.sum("_qw").alias("_qc"),
     )
-
-    # Coarse bucket: double arithmetic is monotone non-decreasing, which is
-    # the only invariant the rank localization needs (bkt(a) <= bkt(b) for
-    # a <= b). Values that collapse to one double share a bucket — fine.
     xd = F.col("_qv").cast("double")
     bkt = F.when(F.col("_qhi") == F.col("_qlo"), F.lit(0)).otherwise(
         F.least(
@@ -92,59 +84,109 @@ def quantile_bins(
             ),
         ).cast("int")
     )
-    vb = vals.crossJoin(F.broadcast(stats)).select("_qv", bkt.alias("_qbkt"))
+    small = hint(stats)
+    vb = (
+        vals.join(small, keys) if keys else vals.crossJoin(small)
+    ).select(*keys, "_qv", "_qw", bkt.alias("_qbkt"))
 
-    hist = vb.groupBy("_qbkt").agg(F.count(F.lit(1)).alias("_qn"))
-    wb = Window.orderBy("_qbkt").rowsBetween(Window.unboundedPreceding, -1)
-    # bounded-grain global window: <= coarse_buckets rows by construction
+    hist = vb.groupBy(*keys, "_qbkt").agg(F.sum("_qw").alias("_qn"))
+    wb = (
+        Window.partitionBy(*keys)
+        .orderBy("_qbkt")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
     cum = hist.select(
+        *keys,
         "_qbkt",
         "_qn",
         F.coalesce(F.sum("_qn").over(wb), F.lit(0)).alias("_qcb"),
     )
 
-    # target ranks k_i = ceil(c*i/n), exact long arithmetic via `div`
     tgt = stats.select(
-        F.explode(F.sequence(F.lit(1), F.lit(n - 1))).alias("_qi"),
-        F.col("_qc"),
+        *keys,
+        "_qc",
+        n.alias("_qnb"),
+        F.explode(F.sequence(F.lit(1), n - 1)).alias("_qi"),
     ).select(
+        *keys,
         "_qi",
-        F.expr(f"(_qc * _qi + {n - 1}) div {n}").alias("_qk"),
+        F.expr("(_qc * _qi + _qnb - 1) div _qnb").alias("_qk"),
     )
-    located = tgt.join(
-        cum,
-        (F.col("_qcb") < F.col("_qk"))
-        & (F.col("_qcb") + F.col("_qn") >= F.col("_qk")),
-    ).select("_qi", "_qbkt", (F.col("_qk") - F.col("_qcb")).alias("_qlr"))
+    # the targets, not the prefix sums, are the broadcast side: their stats
+    # pass then runs as its own broadcast job, beside the histogram's
+    # (measured faster on bench.py's 5M-row probes)
+    located = hint(tgt).alias("t").join(
+        cum.alias("h"),
+        [F.col(f"t.{k}") == F.col(f"h.{k}") for k in keys]
+        + [
+            F.col("h._qcb") < F.col("t._qk"),
+            F.col("h._qcb") + F.col("h._qn") >= F.col("t._qk"),
+        ],
+    ).select(
+        *[F.col(f"t.{k}").alias(k) for k in keys],
+        F.col("t._qi").alias("_qi"),
+        F.col("h._qbkt").alias("_qbkt"),
+        (F.col("t._qk") - F.col("h._qcb")).alias("_qlr"),
+    )
 
-    # exact extraction: rank only inside the (n-1) boundary buckets
-    cand = vb.join(F.broadcast(located), "_qbkt")
-    wr = Window.partitionBy("_qbkt", "_qi").orderBy("_qv")
+    wcum = (
+        Window.partitionBy(*keys, "_qbkt", "_qi")
+        .orderBy("_qv")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     bnd = (
-        cand.withColumn("_qrn", F.row_number().over(wr))
-        .filter(F.col("_qrn") == F.col("_qlr"))
-        .select("_qi", F.col("_qv").alias("_qb"))
+        vb.join(hint(located), [*keys, "_qbkt"])
+        .withColumn("_cw", F.sum("_qw").over(wcum))
+        .filter(
+            (F.col("_cw") >= F.col("_qlr"))
+            & (F.col("_cw") - F.col("_qw") < F.col("_qlr"))
+        )
+        .select(*keys, "_qi", F.col("_qv").alias("_qb"))
     )
-    barr = bnd.groupBy().agg(
+    return bnd.groupBy(*keys).agg(
         F.sort_array(F.collect_list(F.struct("_qi", "_qb"))).alias("_qs")
-    ).select(F.transform("_qs", lambda s: s["_qb"]).alias("_qbs"))
+    ).select(*keys, F.transform("_qs", lambda s: s["_qb"]).alias("_qbs"))
 
-    asc_bucket = F.lit(1) + F.aggregate(
-        F.col("_qbs"),
+
+def _bucket(x: Column, bnds: Column, n: int, descending: bool) -> Column:
+    """``1 + #{b < x}`` over the boundary array ``bnds``, relabeled
+    ``n + 1 - ...`` when descending; NULL when ``x`` or ``bnds`` is NULL."""
+    asc = F.lit(1) + F.aggregate(
+        bnds,
         F.lit(0),
         lambda acc, b: acc + F.when(x > b, F.lit(1)).otherwise(F.lit(0)),
     )
-    bucket: Column = (
-        F.lit(n + 1) - asc_bucket if descending else asc_bucket
+    bucket = F.lit(n + 1) - asc if descending else asc
+    return F.when(x.isNotNull(), bucket.cast("int"))
+
+
+def quantile_bins(
+    df: DataFrame,
+    col: str,
+    n: int,
+    out_col: str,
+    descending: bool = False,
+    coarse_buckets: int = 1024,
+) -> DataFrame:
+    """Add ``out_col`` = exact quantile bucket (1..n) of ``col``.
+
+    ``descending=True`` labels bucket 1 as the LARGEST values (the
+    ``ntile(n) OVER (ORDER BY x DESC)`` reading). Comparisons stay in the
+    column's own type.
+
+    The caller should pass a frame whose lineage is cheap to re-evaluate
+    (aggregate output, or ``localCheckpoint(eager=False)`` it): the bin
+    column frame is scanned by the boundary stages and again by the final
+    bin pass.
+    """
+    x = F.col(col)
+    vals = df.filter(x.isNotNull()).select(
+        x.alias("_qv"), F.lit(1).alias("_qw")
     )
+    barr = _boundaries(vals, [], F.lit(n), coarse_buckets)
     return (
         df.crossJoin(F.broadcast(barr))
-        .withColumn(
-            out_col,
-            F.when(x.isNull(), F.lit(None).cast("int")).otherwise(
-                bucket.cast("int")
-            ),
-        )
+        .withColumn(out_col, _bucket(x, F.col("_qbs"), n, descending))
         .drop("_qbs")
     )
 
@@ -162,12 +204,9 @@ def quantile_bins_grouped(
     of ``ntile(n) OVER (PARTITION BY group ORDER BY x)`` for the
     few-large-groups shape where the partitioned window is NOT safe: with
     5 regions over 10⁹ customers each region's whole frame serializes
-    through one window task. Here every stage stays keyed: per-group
-    (min, max, count), per-(group, bucket) histogram, prefix-summed by a
-    window over <= coarse_buckets rows PER GROUP, exact extraction ranked
-    inside (group, boundary-bucket) slices, boundaries carried back as one
-    array row per group through a keyed join (no crossJoin, no driver
-    collect). Same declared tie semantics as :func:`quantile_bins`.
+    through one window task. Here the core is keyed by the group columns,
+    so every stage stays keyed (no broadcast hints: the group count is the
+    caller's) and the boundary arrays come back through a left join.
 
     Rows whose GROUP key is NULL are outside the grouped-binning domain
     and are dropped by contract: every internal boundary join is keyed on
@@ -179,89 +218,14 @@ def quantile_bins_grouped(
     for c in g:
         df = df.filter(F.col(c).isNotNull())
     x = F.col(col)
-    vals = df.filter(x.isNotNull()).select(*g, x.alias("_qv"))
-
-    stats = vals.groupBy(*g).agg(
-        F.min("_qv").cast("double").alias("_qlo"),
-        F.max("_qv").cast("double").alias("_qhi"),
-        F.count(F.lit(1)).alias("_qc"),
+    vals = df.filter(x.isNotNull()).select(
+        *g, x.alias("_qv"), F.lit(1).alias("_qw")
     )
-    xd = F.col("_qv").cast("double")
-    bkt = F.when(F.col("_qhi") == F.col("_qlo"), F.lit(0)).otherwise(
-        F.least(
-            F.lit(coarse_buckets - 1),
-            F.floor(
-                (xd - F.col("_qlo"))
-                * coarse_buckets
-                / (F.col("_qhi") - F.col("_qlo"))
-            ),
-        ).cast("int")
-    )
-    vb = vals.join(stats, g).select(*g, "_qv", bkt.alias("_qbkt"))
-
-    hist = vb.groupBy(*g, "_qbkt").agg(F.count(F.lit(1)).alias("_qn"))
-    wb = (
-        Window.partitionBy(*g)
-        .orderBy("_qbkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = hist.select(
-        *g,
-        "_qbkt",
-        "_qn",
-        F.coalesce(F.sum("_qn").over(wb), F.lit(0)).alias("_qcb"),
-    )
-
-    tgt = stats.select(
-        *g,
-        "_qc",
-        F.explode(F.sequence(F.lit(1), F.lit(n - 1))).alias("_qi"),
-    ).select(
-        *g,
-        "_qi",
-        F.expr(f"(_qc * _qi + {n - 1}) div {n}").alias("_qk"),
-    )
-    located = tgt.alias("t").join(
-        cum.alias("h"),
-        [F.col(f"t.{c}") == F.col(f"h.{c}") for c in g]
-        + [
-            F.col("h._qcb") < F.col("t._qk"),
-            F.col("h._qcb") + F.col("h._qn") >= F.col("t._qk"),
-        ],
-    ).select(
-        *[F.col(f"t.{c}").alias(c) for c in g],
-        F.col("t._qi").alias("_qi"),
-        F.col("h._qbkt").alias("_qbkt"),
-        (F.col("t._qk") - F.col("h._qcb")).alias("_qlr"),
-    )
-
-    cand = vb.join(located, [*g, "_qbkt"])
-    wr = Window.partitionBy(*g, "_qbkt", "_qi").orderBy("_qv")
-    bnd = (
-        cand.withColumn("_qrn", F.row_number().over(wr))
-        .filter(F.col("_qrn") == F.col("_qlr"))
-        .select(*g, "_qi", F.col("_qv").alias("_qb"))
-    )
-    barr = bnd.groupBy(*g).agg(
-        F.sort_array(F.collect_list(F.struct("_qi", "_qb"))).alias("_qs")
-    ).select(*g, F.transform("_qs", lambda s: s["_qb"]).alias("_qbs"))
-
-    asc_bucket = F.lit(1) + F.aggregate(
-        F.col("_qbs"),
-        F.lit(0),
-        lambda acc, b: acc + F.when(x > b, F.lit(1)).otherwise(F.lit(0)),
-    )
-    bucket = F.lit(n + 1) - asc_bucket if descending else asc_bucket
+    barr = _boundaries(vals, g, F.lit(n), coarse_buckets, hint=lambda d: d)
     # left join: a group whose rows are all NULL-valued has no boundary row
     return (
         df.join(barr, g, "left")
-        .withColumn(
-            out_col,
-            F.when(
-                x.isNull() | F.col("_qbs").isNull(),
-                F.lit(None).cast("int"),
-            ).otherwise(bucket.cast("int")),
-        )
+        .withColumn(out_col, _bucket(x, F.col("_qbs"), n, descending))
         .drop("_qbs")
     )
 
@@ -280,97 +244,23 @@ def quantile_bins_weighted(
     reaches ``ceil(W * i / n)``, ``W`` = total weight — the
     volume-weighted read of "median price" and friends. Weights must be
     POSITIVE integers (cast to long; declare units accordingly): integer
-    rank arithmetic is what keeps the boundary cross-engine exact.
-
-    Same coarse-histogram topology as :func:`quantile_bins` with weight
-    sums in place of counts; the extraction stage collapses candidate
-    buckets to DISTINCT values first, so intra-tie row order never touches
-    the crossing point. NULL value or weight rows are excluded from the
-    boundary mass and bin to NULL.
+    rank arithmetic is what keeps the boundary cross-engine exact. NULL
+    value or weight rows are excluded from the boundary mass and bin to
+    NULL.
     """
     x = F.col(col)
     w = F.col(weight_col)
-    vals = (
-        df.filter(x.isNotNull() & w.isNotNull())
-        .select(x.alias("_qv"), w.cast("long").alias("_qw"))
+    vals = df.filter(x.isNotNull() & w.isNotNull()).select(
+        x.alias("_qv"), w.cast("long").alias("_qw")
     )
-
-    stats = vals.agg(
-        F.min("_qv").cast("double").alias("_qlo"),
-        F.max("_qv").cast("double").alias("_qhi"),
-        F.sum("_qw").alias("_qc"),
-    )
-    xd = F.col("_qv").cast("double")
-    bkt = F.when(F.col("_qhi") == F.col("_qlo"), F.lit(0)).otherwise(
-        F.least(
-            F.lit(coarse_buckets - 1),
-            F.floor(
-                (xd - F.col("_qlo"))
-                * coarse_buckets
-                / (F.col("_qhi") - F.col("_qlo"))
-            ),
-        ).cast("int")
-    )
-    vb = vals.crossJoin(F.broadcast(stats)).select(
-        "_qv", "_qw", bkt.alias("_qbkt")
-    )
-
-    hist = vb.groupBy("_qbkt").agg(F.sum("_qw").alias("_qn"))
-    wb = Window.orderBy("_qbkt").rowsBetween(Window.unboundedPreceding, -1)
-    # bounded-grain global window: <= coarse_buckets rows by construction
-    cum = hist.select(
-        "_qbkt",
-        "_qn",
-        F.coalesce(F.sum("_qn").over(wb), F.lit(0)).alias("_qcb"),
-    )
-
-    tgt = stats.select(
-        F.explode(F.sequence(F.lit(1), F.lit(n - 1))).alias("_qi"),
-        F.col("_qc"),
-    ).select(
-        "_qi",
-        F.expr(f"(_qc * _qi + {n - 1}) div {n}").alias("_qk"),
-    )
-    located = tgt.join(
-        F.broadcast(cum),
-        (F.col("_qcb") < F.col("_qk"))
-        & (F.col("_qcb") + F.col("_qn") >= F.col("_qk")),
-    ).select("_qi", "_qbkt", (F.col("_qk") - F.col("_qcb")).alias("_qlr"))
-
-    # distinct values first: the crossing point is a function of the
-    # per-value weight mass, never of row order inside a tie
-    cand = vb.join(F.broadcast(located), "_qbkt")
-    dv = cand.groupBy("_qbkt", "_qi", "_qlr", "_qv").agg(
-        F.sum("_qw").alias("_wv")
-    )
-    wcum = (
-        Window.partitionBy("_qbkt", "_qi")
-        .orderBy("_qv")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    bnd = (
-        dv.withColumn("_cw", F.sum("_wv").over(wcum))
-        .filter(F.col("_cw") >= F.col("_qlr"))
-        .groupBy("_qi")
-        .agg(F.min("_qv").alias("_qb"))
-    )
-    barr = bnd.groupBy().agg(
-        F.sort_array(F.collect_list(F.struct("_qi", "_qb"))).alias("_qs")
-    ).select(F.transform("_qs", lambda s: s["_qb"]).alias("_qbs"))
-
-    asc_bucket = F.lit(1) + F.aggregate(
-        F.col("_qbs"),
-        F.lit(0),
-        lambda acc, b: acc + F.when(x > b, F.lit(1)).otherwise(F.lit(0)),
-    )
-    bucket = F.lit(n + 1) - asc_bucket if descending else asc_bucket
+    barr = _boundaries(vals, [], F.lit(n), coarse_buckets)
     return (
         df.crossJoin(F.broadcast(barr))
         .withColumn(
             out_col,
             F.when(
-                x.isNull() | w.isNull(), F.lit(None).cast("int")
-            ).otherwise(bucket.cast("int")),
+                w.isNotNull(), _bucket(x, F.col("_qbs"), n, descending)
+            ),
         )
         .drop("_qbs")
     )
@@ -379,9 +269,7 @@ def quantile_bins_weighted(
 def quantile_bins_multi(
     df: DataFrame,
     specs: list[tuple[str, int, str, bool]],
-    value_type: str = "decimal(38,6)",
     coarse_buckets: int = 1024,
-    boundary_frame: DataFrame | None = None,
 ) -> DataFrame:
     """Fused multi-dimension :func:`quantile_bins`: one boundary pass for
     ALL dimensions (RFM-style scoring bins 3+ columns of the same frame —
@@ -389,131 +277,42 @@ def quantile_bins_multi(
     count for no reason; at 100 TB it also re-reads the base once per
     dimension).
 
-    ``specs``: list of ``(col, n, out_col, descending)``. Values of every
-    dimension are cast to ``value_type`` for the shared boundary pipeline —
-    the caller must pick a type that represents all dimensions EXACTLY
-    (integers and sub-scale decimals in ``decimal(38,6)``; do NOT route
-    doubles through a decimal cast, use the single-column form instead).
-    Same declared semantics and topology as :func:`quantile_bins`; the
-    histogram prefix-sum window here is even partitioned (by dimension).
+    ``specs``: list of ``(col, n, out_col, descending)``. Rows explode to
+    ``(dimension, value)`` pairs keyed by dimension, each with its own
+    ``n``; every value is cast to ``decimal(38,6)``, which must represent
+    each dimension EXACTLY (integers and sub-scale decimals; do NOT route
+    doubles here, use the single-column form instead).
     """
-    src = boundary_frame if boundary_frame is not None else df
     pairs = (
-        src.select(
+        df.select(
             F.explode(
                 F.array(
                     *[
                         F.struct(
                             F.lit(i).alias("_qd"),
-                            F.col(c).cast(value_type).alias("_qv"),
+                            F.col(c).cast(_MULTI_TYPE).alias("_qv"),
                         )
                         for i, (c, _, _, _) in enumerate(specs)
                     ]
                 )
             ).alias("_s")
         )
-        .select("_s._qd", "_s._qv")
+        .select("_s._qd", "_s._qv", F.lit(1).alias("_qw"))
         .filter(F.col("_qv").isNotNull())
     )
-    stats = pairs.groupBy("_qd").agg(
-        F.min("_qv").cast("double").alias("_qlo"),
-        F.max("_qv").cast("double").alias("_qhi"),
-        F.count(F.lit(1)).alias("_qc"),
-    )
-    xd = F.col("_qv").cast("double")
-    bkt = F.when(F.col("_qhi") == F.col("_qlo"), F.lit(0)).otherwise(
-        F.least(
-            F.lit(coarse_buckets - 1),
-            F.floor(
-                (xd - F.col("_qlo"))
-                * coarse_buckets
-                / (F.col("_qhi") - F.col("_qlo"))
-            ),
-        ).cast("int")
-    )
-    vb = pairs.join(F.broadcast(stats), "_qd").select(
-        "_qd", "_qv", bkt.alias("_qbkt")
-    )
-
-    hist = vb.groupBy("_qd", "_qbkt").agg(F.count(F.lit(1)).alias("_qn"))
-    wb = (
-        Window.partitionBy("_qd")
-        .orderBy("_qbkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = hist.select(
-        "_qd",
-        "_qbkt",
-        "_qn",
-        F.coalesce(F.sum("_qn").over(wb), F.lit(0)).alias("_qcb"),
-    )
-
     narr = F.array(*[F.lit(n) for (_, n, _, _) in specs])
-    tgt = (
-        stats.select(
-            "_qd",
-            "_qc",
-            F.element_at(narr, F.col("_qd") + 1).alias("_qnb"),
-        )
-        .select(
-            "_qd",
-            "_qc",
-            "_qnb",
-            F.explode(
-                F.sequence(F.lit(1), F.col("_qnb") - 1)
-            ).alias("_qi"),
-        )
-        .select(
-            "_qd",
-            "_qi",
-            F.expr("(_qc * _qi + _qnb - 1) div _qnb").alias("_qk"),
+    barr = _boundaries(
+        pairs, ["_qd"], F.element_at(narr, F.col("_qd") + 1), coarse_buckets
+    )
+    bmap = barr.groupBy().agg(
+        F.map_from_entries(F.collect_list(F.struct("_qd", "_qbs"))).alias(
+            "_qbm"
         )
     )
-    located = tgt.alias("t").join(
-        F.broadcast(cum.alias("h")),
-        (F.col("t._qd") == F.col("h._qd"))
-        & (F.col("h._qcb") < F.col("t._qk"))
-        & (F.col("h._qcb") + F.col("h._qn") >= F.col("t._qk")),
-    ).select(
-        F.col("t._qd").alias("_qd"),
-        F.col("t._qi").alias("_qi"),
-        F.col("h._qbkt").alias("_qbkt"),
-        (F.col("t._qk") - F.col("h._qcb")).alias("_qlr"),
-    )
-
-    cand = vb.join(F.broadcast(located), ["_qd", "_qbkt"])
-    wr = Window.partitionBy("_qd", "_qbkt", "_qi").orderBy("_qv")
-    bnd = (
-        cand.withColumn("_qrn", F.row_number().over(wr))
-        .filter(F.col("_qrn") == F.col("_qlr"))
-        .select("_qd", "_qi", F.col("_qv").alias("_qb"))
-    )
-    barr = bnd.groupBy().agg(
-        F.sort_array(
-            F.collect_list(F.struct("_qd", "_qi", "_qb"))
-        ).alias("_qbs")
-    )
-
-    def _count_below(i: int, x: Column):
-        def merge(acc, s):
-            return acc + F.when(
-                (s["_qd"] == F.lit(i)) & (x.cast(value_type) > s["_qb"]),
-                F.lit(1),
-            ).otherwise(F.lit(0))
-
-        return merge
-
-    out = df.crossJoin(F.broadcast(barr))
+    out = df.crossJoin(F.broadcast(bmap))
     for i, (c, n, out_col, descending) in enumerate(specs):
-        x = F.col(c)
-        asc_bucket = F.lit(1) + F.aggregate(
-            F.col("_qbs"), F.lit(0), _count_below(i, x)
-        )
-        bucket = F.lit(n + 1) - asc_bucket if descending else asc_bucket
+        x = F.col(c).cast(_MULTI_TYPE)
         out = out.withColumn(
-            out_col,
-            F.when(x.isNull(), F.lit(None).cast("int")).otherwise(
-                bucket.cast("int")
-            ),
+            out_col, _bucket(x, F.col("_qbm")[i], n, descending)
         )
-    return out.drop("_qbs")
+    return out.drop("_qbm")

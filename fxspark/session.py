@@ -90,13 +90,10 @@ def get_spark(app_name: str = "fxspark", master: str | None = None) -> SparkSess
     return builder.getOrCreate()
 
 
-from functools import lru_cache
-
-
-@lru_cache(maxsize=256)
 def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
     """Columns stored as parquet TIMESTAMP(NANOS) (footer metadata only —
-    cheap at any scale; one footer read per table path)."""
+    cheap at any scale; read once per load_table cache miss, so a file
+    rewritten at the same path is always read afresh)."""
     import pyarrow.parquet as pq
 
     schema = pq.read_schema(path)
@@ -110,11 +107,14 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
 # and oracle runs always recompute (optimization-round contract). It is the
 # DataFrame analogue of a catalog's table registration: without it every
 # load_table call re-lists the file, re-reads the footer schema, and re-runs
-# the nanos/NTZ normalization analysis — measured 131 ms per miss against
-# 0.9 ms per hit (events, sf0.001, local[1] on a 4-vCPU VM, median of 48),
-# with ~600 scan sites across the 249-query registry ≈ over a minute per
-# sweep of pure driver-side metadata work (the driver should do almost no
-# data work — including repeated planning).
+# the nanos/NTZ normalization analysis. A hit re-aliases the cached frame with
+# one ``toDF`` (fresh attribute IDs, so two loads of one table self-join
+# exactly like two misses). Measured at sf0.001, local[1] on a 4-vCPU VM,
+# median of 30: a hit costs 31 / 21 / 35 ms (events / nation / lineitem)
+# against 253 / 195 / 247 ms per miss. With ~600 scan sites across the
+# 249-query registry that saves over a minute per sweep of pure driver-side
+# metadata work (the driver should do almost no data work — including
+# repeated planning).
 #
 # Safety: the key carries the file mtime (a rebuilt fixture at the same path
 # misses), and the value carries the owning session (a different session —
@@ -148,7 +148,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cache_key is not None:
         hit = _TABLE_CACHE.get(cache_key)
         if hit is not None and hit[0] is spark:
-            return hit[1]
+            return hit[1].toDF(*hit[1].columns)
     df = spark.read.parquet(path)
     from pyspark.sql import functions as F
 

@@ -1,0 +1,55 @@
+"""load_table's plan cache: a cache hit must behave exactly like a miss."""
+
+from __future__ import annotations
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+
+def test_load_table_cache_hit_self_joins_like_a_miss(spark, sf_dir):
+    from fxspark import session
+
+    def self_join_rows(a, b):
+        return a.join(b, a["n_regionkey"] == b["n_nationkey"]).count()
+
+    session._TABLE_CACHE.clear()
+    a = session.load_table(spark, sf_dir, "nation")
+    session._TABLE_CACHE.clear()
+    want = self_join_rows(a, session.load_table(spark, sf_dir, "nation"))
+
+    # a miss, then a hit of the same table
+    session._TABLE_CACHE.clear()
+    a = session.load_table(spark, sf_dir, "nation")
+    b = session.load_table(spark, sf_dir, "nation")
+    assert self_join_rows(a, b) == want > 0
+
+
+def test_load_table_rereads_nanos_columns_of_a_rewritten_file(
+    spark, tmp_path
+):
+    from fxspark.session import load_table
+
+    path = tmp_path / "t.parquet"
+    micros = 1_700_000_000_000_000
+    pq.write_table(
+        pa.table({"ts": pa.array([micros], type=pa.timestamp("us"))}), path
+    )
+    first = load_table(spark, str(tmp_path), "t")
+    assert dict(first.dtypes)["ts"] == "timestamp"
+    want = first.collect()[0]["ts"]
+
+    # same path, now TIMESTAMP(NANOS), with a later mtime
+    mtime_ns = os.stat(path).st_mtime_ns
+    pq.write_table(
+        pa.table(
+            {"ts": pa.array([micros * 1000], type=pa.timestamp("ns"))}
+        ),
+        path,
+        version="2.6",
+    )
+    os.utime(path, ns=(mtime_ns + 10**9, mtime_ns + 10**9))
+    second = load_table(spark, str(tmp_path), "t")
+    assert dict(second.dtypes)["ts"] == "timestamp"
+    assert second.collect()[0]["ts"] == want
