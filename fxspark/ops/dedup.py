@@ -1,15 +1,34 @@
 """Deduplication operators (north-star extension, BASELINE.json).
 
-Four tiers, increasing fuzziness:
+Tiers, increasing fuzziness:
 
 1. ``exact_dedup`` — hash-groupBy on a normalized fingerprint.
-2. ``jaccard_pairs`` — EXACT n-gram-Jaccard near-dup pairs via an inverted
-   shingle index (no approximation; candidate generation is lossless for any
-   threshold > 0 because overlapping sets share at least one shingle).
-3. ``minhash_lsh_pairs`` — MinHash signatures + banded LSH candidates,
-   verified with exact Jaccard. The 100 TB path: cost is O(docs × bands),
-   never all-pairs.
-4. ``simhash64`` — 64-bit SimHash fingerprint for hamming-bucket dedup.
+2. ``jaccard_pairs``, ``jaccard_pairs_prefix``, ``containment_pairs`` —
+   EXACT n-gram set similarity via an inverted shingle index (no
+   approximation; candidate generation is lossless for any threshold > 0
+   because overlapping sets share at least one shingle).
+3. ``minhash_lsh_pairs``, ``minhash_agreement``, ``minhash_cross_pairs`` —
+   MinHash signatures + banded LSH candidates, verified with exact Jaccard.
+   The 100 TB path: cost is O(docs × bands), never all-pairs.
+4. ``simhash_pairs`` (hamming bands over ``simhash_codes``) and
+   ``edit_distance_pairs`` (SymSpell delete neighborhoods).
+
+The pair ops share one filter-then-verify core — generate candidates by
+bucket collision, then verify each candidate exactly:
+
+- ``_bucket_pairs``: the id-ordered self-join on a bucket key (shingle, LSH
+  band, SimHash byte, delete-variant hash) — ``jaccard_pairs_prefix``,
+  ``containment_pairs``, ``minhash_lsh_pairs``, ``minhash_agreement``,
+  ``simhash_pairs``, ``edit_distance_pairs``;
+- ``_capped_index``: the stop-shingle-capped inverted index, with set sizes
+  and verify arrays over the same capped universe — ``jaccard_pairs_prefix``,
+  ``containment_pairs``;
+- ``_bands``: the banded-signature select — the three MinHash ops;
+- ``_with_jaccard``: the exact-Jaccard verify — ``jaccard_pairs_prefix`` and
+  the three MinHash ops.
+
+``jaccard_pairs`` keeps its own plain inverted-index code: it is the
+independent reference the prefix and LSH ops are tested against.
 
 Scale notes:
 
@@ -87,6 +106,81 @@ def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     ).withColumn("_sz", F.size("_sh"))
 
 
+def _bucket_pairs(
+    frame: DataFrame, bucket_cols: list[str], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Candidate generation shared by every self-pair op: the self-join of
+    ``frame`` (one row per ``_id`` and bucket) on ``bucket_cols``, kept as
+    ``id_a < id_b`` — each unordered pair of distinct ids once per shared
+    bucket. Emits ``id_a``, ``id_b``, the bucket columns, and each ``carry``
+    column suffixed ``_a``/``_b``; only what is carried crosses the
+    bucket-keyed shuffle."""
+
+    def side(s: str) -> DataFrame:
+        return frame.select(
+            F.col("_id").alias(f"id_{s}"),
+            *bucket_cols,
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return (
+        side("a")
+        .join(side("b"), list(bucket_cols))
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+
+
+def _with_jaccard(
+    cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame
+) -> DataFrame:
+    """Exact verify shared by the prefix and MinHash ops: attach to each
+    candidate ``(id_a, id_b)`` the exact Jaccard of its two shingle sets
+    (``sets_a`` keyed by ``id_a``, ``sets_b`` by ``id_b``; a broadcast hint
+    on either side survives into the join), rounded to 6 places."""
+    inter = F.size(F.array_intersect("_sha", "_shb"))
+    jac = inter / (F.size("_sha") + F.size("_shb") - inter)
+    return (
+        cand.join(
+            sets_a.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha")),
+            "id_a",
+        )
+        .join(
+            sets_b.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb")),
+            "id_b",
+        )
+        .withColumn("jaccard", F.round(jac, 6))
+    )
+
+
+def _capped_index(
+    postings: DataFrame, max_shingle_freq: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """The inverted shingle index of ``postings`` (one ``(_id, _s)`` row per
+    document and distinct shingle), materialized once — both pair-join
+    sides and the set rollup read it — and the shingle sets rebuilt from
+    it as ``(_id, _sh, _sz)``.
+
+    ``max_shingle_freq`` drops shingles in more than that many docs from
+    the universe (stop-shingle cap) BEFORE sizes and verify arrays are
+    rebuilt, so a pair's intersection and its set sizes count the same
+    shingles — mixing pre-cap ``|A|, |B|`` with a post-cap ``|A∩B|`` would
+    bias the score low. A capped index row also carries its shingle's
+    document frequency ``_df``.
+
+    The frequency is an aggregate joined back, not a window over ``_s``: a
+    window reads the postings once but leaves the checkpoint
+    hash-partitioned on ``_s``, and Spark does not reuse an exchange
+    between two reads of such a checkpoint (``containment_pairs``' two
+    size lookups then ran one more broadcast and aggregation)."""
+    if max_shingle_freq is not None:
+        freq = postings.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
+        postings = postings.join(freq, "_s").filter(F.col("_df") <= max_shingle_freq)
+    inv = postings.localCheckpoint()
+    return inv, inv.groupBy("_id").agg(
+        F.collect_list("_s").alias("_sh"), F.count(F.lit(1)).alias("_sz")
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -99,6 +193,12 @@ def jaccard_pairs(
 
     Plan: explode distinct shingles → self-equi-join on shingle (the inverted
     index) → count shared shingles per pair → ``|A∩B| / (|A|+|B|-|A∩B|)``.
+
+    Deliberately outside the module's candidate → verify core (it calls
+    none of ``_bucket_pairs``, ``_capped_index`` or ``_with_jaccard``): it
+    is the independent reference that ``jaccard_pairs_prefix`` and
+    ``minhash_lsh_pairs`` are tested against, so a fault in the core cannot
+    hide by changing both sides of that comparison.
     """
     sets_ = _shingle_sets(df, id_col, text_col, n)
     inv = sets_.select("_id", "_sz", F.explode("_sh").alias("_s"))
@@ -167,72 +267,53 @@ def jaccard_pairs_prefix(
     is used with, these cut the verify set several-fold (measured ~2× end to
     end at sf0.1).
     """
-    # The shingle explode is the CPU-heavy step and every downstream stage
-    # (df-frequency, prefix index, both verify sides) references it —
-    # materialize the exploded inverted index ONCE and derive everything
-    # from the checkpoint instead of recomputing the split per reference.
-    if max_shingle_freq is not None:
-        inv0 = df.select(
+    if max_shingle_freq is None:
+        # Uncapped, the DOC-grain sets are what gets materialized: the
+        # shingle explode is the CPU-heavy step, and the df-frequency, the
+        # prefix index and both verify sides all read it. Materializing the
+        # frequency-joined index instead, as the capped branch does, keeps
+        # the job count but runs the shingling once per side of the
+        # frequency join (5.66 → 9.31 s median at sf0.1, 4 cores, 7
+        # alternating rounds in one JVM).
+        sets_ = _shingle_sets(df, id_col, text_col, n).localCheckpoint()
+        inv = sets_.select("_id", F.explode("_sh").alias("_s"))
+        inv = inv.join(inv.groupBy("_s").agg(F.count(F.lit(1)).alias("_df")), "_s")
+    else:
+        postings = df.select(
             F.col(id_col).alias("_id"),
             F.explode(shingles(F.col(text_col), n)).alias("_s"),
         )
-        freq = inv0.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-        invc = (
-            inv0.join(freq, "_s").filter(F.col("_df") <= max_shingle_freq)
-        ).localCheckpoint()
-        sets_ = invc.groupBy("_id").agg(
-            F.collect_list("_s").alias("_sh"),
-            F.count(F.lit(1)).alias("_sz"),
-        )
-        inv = invc.join(
-            invc.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz")), "_id"
-        )
-    else:
-        sets_ = _shingle_sets(df, id_col, text_col, n).localCheckpoint()
-        inv = sets_.select("_id", "_sz", F.explode("_sh").alias("_s"))
-        freq = inv.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-        inv = inv.join(freq, "_s")
-    w = Window.partitionBy("_id").orderBy("_df", "_s")
-    prefix = (
-        inv
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= F.col("_sz") - F.ceil(F.col("_sz") * threshold) + 1)
-        .select("_id", "_s", "_rk", "_sz")
-    )
-    pa = prefix.select(
-        F.col("_id").alias("id_a"), "_s",
-        F.col("_rk").alias("_rka"), F.col("_sz").alias("_sza"),
-    )
-    pb = prefix.select(
-        F.col("_id").alias("id_b"), "_s",
-        F.col("_rk").alias("_rkb"), F.col("_sz").alias("_szb"),
-    )
-    min_overlap = F.ceil(
-        (F.col("_sza") + F.col("_szb")) * threshold / (1.0 + threshold)
-    )
+        inv, sets_ = _capped_index(postings, max_shingle_freq)
+    # The pruning bounds use a threshold a hair below ``threshold``: a float
+    # product such as 63 · 0.8 / 1.8 lands just above the integer 28, and
+    # its ceil would prune a pair at exactly J = threshold. A looser bound
+    # only admits candidates that the exact verify then drops.
+    t = threshold - 1e-9
+    # One window operator ranks each doc's shingles rarest-first and counts
+    # its (capped) set size over the same partition.
+    doc = Window.partitionBy("_id").orderBy("_df", "_s")
+    whole = doc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    prefix = inv.withColumns(
+        {"_rk": F.row_number().over(doc), "_sz": F.count(F.lit(1)).over(whole)}
+    ).filter(F.col("_rk") <= F.col("_sz") - F.ceil(F.col("_sz") * t) + 1)
+    min_overlap = F.ceil((F.col("_sz_a") + F.col("_sz_b")) * t / (1.0 + t))
     cand = (
-        pa.join(pb, "_s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.col("_szb") >= F.col("_sza") * threshold)
-        .filter(F.col("_sza") >= F.col("_szb") * threshold)
+        _bucket_pairs(prefix, ["_s"], carry=("_rk", "_sz"))
+        .filter(F.col("_sz_b") >= F.col("_sz_a") * t)
+        .filter(F.col("_sz_a") >= F.col("_sz_b") * t)
         .filter(
-            F.least(F.col("_sza") - F.col("_rka"), F.col("_szb") - F.col("_rkb"))
+            F.least(F.col("_sz_a") - F.col("_rk_a"), F.col("_sz_b") - F.col("_rk_b"))
             + 1
             >= min_overlap
         )
         .select("id_a", "id_b")
         .distinct()
     )
-    sa = sets_.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
-    sb = sets_.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
     # The verify stage is CPU-bound array intersection; AQE would coalesce
     # the small candidate shuffle to a handful of tasks and serialize it —
     # spread the intersections across the cluster explicitly.
-    joined = cand.repartition("id_a").join(sa, "id_a").join(sb, "id_b")
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    jac = inter / (F.size("_sha") + F.size("_shb") - inter)
     return (
-        joined.withColumn("jaccard", F.round(jac, 6))
+        _with_jaccard(cand.repartition("id_a"), sets_, sets_)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -268,32 +349,20 @@ def containment_pairs(
     # them for the build and probe sides (measured 2.5x on the sf0.1
     # fixture). The checkpointed frame is one small row per document.
     sets_ = _shingle_sets(df, id_col, text_col, n).localCheckpoint()
-    inv = sets_.select("_id", F.explode("_sh").alias("_s"))
-    if max_shingle_freq is not None:
-        freq = inv.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-        inv = (
-            inv.join(freq, "_s")
-            .filter(F.col("_df") <= max_shingle_freq)
-            .drop("_df")
-        )
-    # The capped index feeds BOTH join sides and the size rollup.
-    inv = inv.localCheckpoint()
-    sz = inv.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
+    inv, sets_ = _capped_index(
+        sets_.select("_id", F.explode("_sh").alias("_s")), max_shingle_freq
+    )
+    sz = sets_.select("_id", "_sz")
     # The pair join carries ONLY ids: set sizes attach to the (much
     # smaller) pair-count table afterwards, so the shingle-keyed shuffle
     # moves two longs per posting instead of four.
-    a = inv.select(F.col("_id").alias("id_a"), "_s")
-    b = inv.select(F.col("_id").alias("id_b"), "_s")
     inter = (
-        a.join(b, "_s")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(inv, ["_s"])
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
-        .join(sz.select(F.col("_id").alias("id_a"),
-                        F.col("_sz").alias("sz_a")), "id_a")
-        .join(sz.select(F.col("_id").alias("id_b"),
-                        F.col("_sz").alias("sz_b")), "id_b")
+        .join(sz.withColumnsRenamed({"_id": "id_a", "_sz": "sz_a"}), "id_a")
+        .join(sz.withColumnsRenamed({"_id": "id_b", "_sz": "sz_b"}), "id_b")
     )
     cont = F.col("shared") / F.least(F.col("sz_a"), F.col("sz_b"))
     return (
@@ -399,28 +468,19 @@ def _signature_from_sets(sets_: DataFrame, k: int, hash_fn: str = "xxhash64") ->
     )
 
 
-def _band_key_exprs(k: int, bands: int, hash_fn: str) -> list:
-    """Band-key expressions over a ``signature`` array column: compacted
-    xxhash64 key (cheap shuffle) or the exact r-value tuple (md5_60 oracle
-    path — band collisions bit-reproducible by any engine)."""
+def _bands(sig: DataFrame, k: int, bands: int, hash_fn: str) -> DataFrame:
+    """Banded-signature select shared by the MinHash ops: one
+    ``(_id, _band, _bh)`` row per document and band of its ``signature``.
+    The band key is a compacted xxhash64 (cheap shuffle) or, for any other
+    ``hash_fn``, the exact r-value tuple (the md5_60 oracle path — band
+    collisions bit-reproducible by any engine)."""
     r = k // bands
-    if hash_fn == "xxhash64":
-        return [
-            F.expr(
-                "xxhash64("
-                + ",".join(f"signature[{i}]" for i in range(b * r, (b + 1) * r))
-                + ")"
-            )
-            for b in range(bands)
-        ]
-    return [
-        F.expr(
-            "concat_ws(','"
-            + "".join(f",signature[{i}]" for i in range(b * r, (b + 1) * r))
-            + ")"
-        )
+    head = "xxhash64(" if hash_fn == "xxhash64" else "concat_ws(',',"
+    keys = [
+        F.expr(head + ",".join(f"signature[{i}]" for i in range(b * r, (b + 1) * r)) + ")")
         for b in range(bands)
     ]
+    return sig.select("_id", F.posexplode(F.array(*keys)).alias("_band", "_bh"))
 
 
 def minhash_cross_pairs(
@@ -446,28 +506,23 @@ def minhash_cross_pairs(
     the open band/shingle domains. Emits (doc_id, bench_id, jaccard)."""
     corpus_sets = _shingle_sets(corpus, id_col, text_col, n).localCheckpoint()
     bench_sets = _shingle_sets(bench, id_col, text_col, n).localCheckpoint()
-    keys = F.posexplode(F.array(*_band_key_exprs(k, bands, hash_fn))).alias(
-        "_band", "_bh"
-    )
-    cb = _signature_from_sets(corpus_sets, k, hash_fn).select("_id", keys)
-    bb = _signature_from_sets(bench_sets, k, hash_fn).select(
-        F.col("_id").alias("_bid"), keys
-    )
+
+    def banded(sets_: DataFrame, id_name: str) -> DataFrame:
+        sig = _signature_from_sets(sets_, k, hash_fn)
+        return _bands(sig, k, bands, hash_fn).withColumnRenamed("_id", id_name)
+
     cand = (
-        cb.join(F.broadcast(bb), ["_band", "_bh"])
-        .select(F.col("_id").alias("doc_id"), F.col("_bid").alias("bench_id"))
+        banded(corpus_sets, "id_a")
+        .join(F.broadcast(banded(bench_sets, "id_b")), ["_band", "_bh"])
+        .select("id_a", "id_b")
         .distinct()
     )
-    sa = corpus_sets.select(F.col("_id").alias("doc_id"), F.col("_sh").alias("_sha"))
-    sb = bench_sets.select(F.col("_id").alias("bench_id"), F.col("_sh").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    jac = inter / (F.size("_sha") + F.size("_shb") - inter)
     return (
-        cand.join(sa, "doc_id")
-        .join(F.broadcast(sb), "bench_id")
-        .withColumn("jaccard", F.round(jac, 6))
+        _with_jaccard(cand, corpus_sets, F.broadcast(bench_sets))
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "bench_id", "jaccard")
+        .select(
+            F.col("id_a").alias("doc_id"), F.col("id_b").alias("bench_id"), "jaccard"
+        )
     )
 
 
@@ -501,30 +556,15 @@ def minhash_lsh_pairs(
     if verify:
         sets_ = sets_.localCheckpoint()
     sig = _signature_from_sets(sets_, k, hash_fn).localCheckpoint()
-    banded = sig.select(
-        "_id",
-        F.posexplode(F.array(*_band_key_exprs(k, bands, hash_fn))).alias(
-            "_band", "_bh"
-        ),
-    )
     cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["_band", "_bh"])
-        .filter(F.col("x._id") < F.col("y._id"))
-        .select(
-            F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b")
-        )
+        _bucket_pairs(_bands(sig, k, bands, hash_fn), ["_band", "_bh"])
+        .select("id_a", "id_b")
         .distinct()
     )
     if not verify:
         return cand
-    sa = sets_.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
-    sb = sets_.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
-    joined = cand.join(sa, "id_a").join(sb, "id_b")
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    jac = inter / (F.size("_sha") + F.size("_shb") - inter)
     return (
-        joined.withColumn("jaccard", F.round(jac, 6))
+        _with_jaccard(cand, sets_, sets_)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -548,29 +588,13 @@ def minhash_agreement(
     :func:`minhash_lsh_pairs` (band buckets only, never all pairs)."""
     sets_ = _shingle_sets(df, id_col, text_col, n).localCheckpoint()
     sig = _signature_from_sets(sets_, k, hash_fn).localCheckpoint()
-    banded = sig.select(
-        "_id",
-        F.posexplode(F.array(*_band_key_exprs(k, bands, hash_fn))).alias(
-            "_band", "_bh"
-        ),
-    )
     cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["_band", "_bh"])
-        .filter(F.col("x._id") < F.col("y._id"))
-        .select(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"))
+        _bucket_pairs(_bands(sig, k, bands, hash_fn), ["_band", "_bh"])
+        .select("id_a", "id_b")
         .distinct()
+        .join(sig.withColumnsRenamed({"_id": "id_a", "signature": "_siga"}), "id_a")
+        .join(sig.withColumnsRenamed({"_id": "id_b", "signature": "_sigb"}), "id_b")
     )
-    siga = sig.select(
-        F.col("_id").alias("id_a"), F.col("signature").alias("_siga")
-    )
-    sigb = sig.select(
-        F.col("_id").alias("id_b"), F.col("signature").alias("_sigb")
-    )
-    sa = sets_.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
-    sb = sets_.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    jac = inter / (F.size("_sha") + F.size("_shb") - inter)
     eq = F.aggregate(
         F.zip_with(
             "_siga",
@@ -580,17 +604,8 @@ def minhash_agreement(
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    return (
-        cand.join(siga, "id_a")
-        .join(sigb, "id_b")
-        .join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(jac, 6).alias("jaccard"),
-            eq.cast("long").alias("eq_components"),
-        )
+    return _with_jaccard(cand, sets_, sets_).select(
+        "id_a", "id_b", "jaccard", eq.cast("long").alias("eq_components")
     )
 
 
@@ -628,16 +643,10 @@ def simhash_pairs(
             )
         ).alias("_band", "_bv"),
     )
-    x = banded.select(
-        F.col("_id").alias("id_a"), F.col("_code").alias("_ca"), "_band", "_bv"
-    )
-    y = banded.select(
-        F.col("_id").alias("id_b"), F.col("_code").alias("_cb"), "_band", "_bv"
-    )
+    hamming = F.bit_count(F.col("_code_a").bitwiseXOR(F.col("_code_b")))
     return (
-        x.join(y, ["_band", "_bv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.bit_count(F.col("_ca").bitwiseXOR(F.col("_cb"))).alias("hamming"))
+        _bucket_pairs(banded, ["_band", "_bv"], carry=("_code",))
+        .select("id_a", "id_b", hamming.alias("hamming"))
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
@@ -647,13 +656,13 @@ def simhash_codes(
     df: DataFrame, id_col: str, text_col: str, n: int = 1,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Per-document 64-bit SimHash code as ``(_id, _code)`` — the set-returning
-    twin of ``simhash64``, and the fast path: explode shingles once, then 64
-    vectorized ``sum(±1)`` bit-vote aggregates in ONE hash aggregation (the
-    same single-shuffle shape as ``minhash_signature``). The column-expression
-    form (64 sequential array folds per row) is ~30× slower at 5k docs and
-    degrades with document length; this form is plain scan + hash-agg and
-    scales like any groupBy.
+    """Per-document 64-bit SimHash code as ``(_id, _code)``: per-bit
+    majority vote over the shingle (or token) base hashes. Explode shingles
+    once, then 64 vectorized ``sum(±1)`` bit-vote aggregates in ONE hash
+    aggregation (the same single-shuffle shape as ``minhash_signature``).
+    A per-row column-expression form (64 sequential array folds per row)
+    was ~30× slower at 5k docs and degraded with document length; this
+    form is plain scan + hash-agg and scales like any groupBy.
 
     Documents with zero shingles produce no row (no similarity signal).
     """
@@ -684,31 +693,6 @@ def simhash_codes(
         for b in range(64)
     )
     return agg.select("_id", F.expr(code_sql).alias("_code"))
-
-
-def simhash64(col: Column, n: int = 1) -> Column:
-    """64-bit SimHash of a text column: per-bit majority vote over token
-    (or shingle) xxhash64 values, folded JVM-side with array expressions.
-
-    Near-dup candidates are then rows within small hamming distance —
-    bucketable by splitting the 64 bits into bands (pigeonhole).
-    """
-    sh = shingles(col, n) if n > 1 else F.array_distinct(tokens(col))
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    # vote_b = sum over tokens of bit_b(+1/-1); bit_b = sign(vote_b)
-    bit_cols = []
-    for b in range(64):
-        votes = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(F.lit(1 << b) if b < 63 else F.lit(-(2**63))) != 0, 1).otherwise(-1),
-        )
-        bit_cols.append(F.when(votes > 0, F.lit(1 << b if b < 63 else -(2**63))).otherwise(F.lit(0)))
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
 
 
 # dup_clusters is size-adaptive: near-dup graphs are tiny relative to the
@@ -841,12 +825,9 @@ def edit_distance_pairs(
     inv = base.select("_id", "_s", F.explode(variants).alias("_v")).select(
         "_id", "_s", F.xxhash64("_v").alias("_vh")
     )
-    a = inv.select(F.col("_id").alias("id_a"), F.col("_s").alias("_sa"), "_vh")
-    b = inv.select(F.col("_id").alias("id_b"), F.col("_s").alias("_sb"), "_vh")
     return (
-        a.join(b, "_vh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.levenshtein("_sa", "_sb").alias("dist"))
+        _bucket_pairs(inv, ["_vh"], carry=("_s",))
+        .select("id_a", "id_b", F.levenshtein("_s_a", "_s_b").alias("dist"))
         .distinct()
         .filter(F.col("dist") <= max_dist)
     )

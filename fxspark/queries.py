@@ -714,9 +714,10 @@ def q_doc_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     are dropped from the universe BEFORE sizes and intersections are counted
     (stop-shingle removal — the knob that bounds inverted-index bucket size
     at corpus scale, ``ops/dedup.jaccard_pairs`` ``max_shingle_freq``). This
-    is the oracle-differential twin of the round-1 ADVICE fix at
-    ``dedup.py:112`` (sizes recomputed over the capped universe); the unit
-    property test pins small cases, this pins the fixture corpus.
+    is the oracle-differential twin of the round-1 ADVICE fix in
+    ``ops/dedup.jaccard_pairs`` (sizes recomputed over the capped
+    universe; the prefix op shares it through ``_capped_index``); the unit
+    and property tests pin small cases, this pins the fixture corpus.
     Implementation: prefix-filtered within the capped universe (cap bounds
     bucket width, prefix bounds candidates), plus the PPJoin length and
     position filters (exactness-preserving candidate pruning) and a single
@@ -826,7 +827,12 @@ def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MD5_60 = "('0x'||substr(md5({c}),1,15))::BIGINT"
 
 
-def _minhash_oracle(k: int = 64, bands: int = 16, threshold: float = 0.8) -> str:
+def _minhash_ctes(k: int, bands: int) -> str:
+    """The ``toks/sh/h/sig/bands`` CTEs the md5_60 MinHash oracles share:
+    trigram sets ``sh``, the 60-bit base hash ``h``, the k universal-hash
+    mins ``sig`` (``ops/dedup._minhash_perms``), and one ``bands`` row per
+    (doc, band) keyed by its exact r-value tuple. Callers append their own
+    candidate and verify CTEs after it."""
     from fxspark.ops.dedup import _MERSENNE_31 as M, _minhash_perms
 
     r = k // bands
@@ -840,8 +846,6 @@ def _minhash_oracle(k: int = 64, bands: int = 16, threshold: float = 0.8) -> str
         + ") AS bk FROM sig"
         for b in range(bands)
     )
-    jac = ("CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)"
-           " / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)))")
     return f"""
     WITH toks AS (
       SELECT doc_id, string_split(lower(trim(text)), ' ') AS t FROM documents
@@ -856,7 +860,13 @@ def _minhash_oracle(k: int = 64, bands: int = 16, threshold: float = 0.8) -> str
       SELECT doc_id, {sig} FROM h GROUP BY doc_id
     ), bands AS (
       {band_arms}
-    ), cand AS (
+    )"""
+
+
+def _minhash_oracle(k: int = 64, bands: int = 16, threshold: float = 0.8) -> str:
+    jac = ("CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)"
+           " / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)))")
+    return _minhash_ctes(k, bands) + f""", cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM bands a JOIN bands b ON a.bn = b.bn AND a.bk = b.bk
                                AND a.doc_id < b.doc_id
@@ -5511,37 +5521,9 @@ def q_doc_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_cross_oracle(
     k: int = 64, bands: int = 16, threshold: float = 0.7
 ) -> str:
-    from fxspark.ops.dedup import _MERSENNE_31 as M, _minhash_perms
-
-    r = k // bands
-    sig = ", ".join(
-        f"min(({a}*x + {b}) % {M}) AS h{i}"
-        for i, (a, b) in enumerate(_minhash_perms(k))
-    )
-    band_arms = "\n      UNION ALL ".join(
-        f"SELECT doc_id, {b} AS bn, concat_ws(',', "
-        + ", ".join(f"h{i}" for i in range(b * r, (b + 1) * r))
-        + ") AS bk FROM sig"
-        for b in range(bands)
-    )
     jac = ("CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)"
            " / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)))")
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(trim(text)), ' ') AS t FROM documents
-    ), sh AS (
-      SELECT doc_id, list_distinct([array_to_string(t[i:i+2], ' ')
-                                    for i in range(1, len(t)-1)]) AS s
-      FROM toks WHERE len(t) >= 3
-    ), h AS (
-      SELECT doc_id,
-             CAST(('0x'||substr(md5(sh0),1,15)) AS BIGINT) % {M} AS x
-      FROM (SELECT doc_id, unnest(s) AS sh0 FROM sh)
-    ), sig AS (
-      SELECT doc_id, {sig} FROM h GROUP BY doc_id
-    ), bands AS (
-      {band_arms}
-    ), cand AS (
+    return _minhash_ctes(k, bands) + f""", cand AS (
       SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS bench_id
       FROM bands a JOIN bands b ON a.bn = b.bn AND a.bk = b.bk
       WHERE a.doc_id % 10 <> 0 AND b.doc_id % 10 = 0
@@ -11236,40 +11218,12 @@ def q_doc_pair_budget_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_agreement_oracle(k: int = 64, bands: int = 16) -> str:
-    from fxspark.ops.dedup import _MERSENNE_31 as M
-    from fxspark.ops.dedup import _minhash_perms
-
-    r = k // bands
-    sig = ", ".join(
-        f"min(({a}*x + {b}) % {M}) AS h{i}"
-        for i, (a, b) in enumerate(_minhash_perms(k))
-    )
-    band_arms = "\n      UNION ALL ".join(
-        f"SELECT doc_id, {b} AS bn, concat_ws(',', "
-        + ", ".join(f"h{i}" for i in range(b * r, (b + 1) * r))
-        + ") AS bk FROM sig"
-        for b in range(bands)
-    )
     eq = " + ".join(f"CAST(sa.h{i} = sb.h{i} AS INT)" for i in range(k))
     jac = (
         "CAST(len(list_intersect(ta.s, tb.s)) AS DOUBLE)"
         " / (len(ta.s) + len(tb.s) - len(list_intersect(ta.s, tb.s)))"
     )
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(trim(text)), ' ') AS t FROM documents
-    ), sh AS (
-      SELECT doc_id, list_distinct([array_to_string(t[i:i+2], ' ')
-                                    for i in range(1, len(t)-1)]) AS s
-      FROM toks WHERE len(t) >= 3
-    ), h AS (
-      SELECT doc_id, {_MD5_60.format(c='sh0')} % {M} AS x
-      FROM (SELECT doc_id, unnest(s) AS sh0 FROM sh)
-    ), sig AS (
-      SELECT doc_id, {sig} FROM h GROUP BY doc_id
-    ), bands AS (
-      {band_arms}
-    ), cand AS (
+    return _minhash_ctes(k, bands) + f""", cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM bands a JOIN bands b ON a.bn = b.bn AND a.bk = b.bk
                                AND a.doc_id < b.doc_id

@@ -1,5 +1,6 @@
-"""Round-4 curation-depth operators: duplicated-span detection, two-pass
-Misra-Gries heavy hitters, SemDeDup, bigram LM scoring.
+"""Round-4 curation-depth operators: two-pass Misra-Gries heavy hitters
+and SemDeDup. (Duplicated-span detection and cross-corpus MinHash live in
+``test_dedup.py``.)
 
 Hand-written frames pin the semantics; plan assertions pin the scale shape
 (the Misra-Gries candidate superset guarantee is the load-bearing property —
@@ -12,41 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from fxspark.ops.dedup import chunk_dup_spans
 from fxspark.ops.sketch import heavy_hitters_exact, misra_gries_candidates
 from fxspark.ops.similarity import semantic_dedup
-
-
-def test_chunk_dup_spans_hand_values(spark):
-    # doc 0 and 1 share the 4-token chunk "a b c d"; doc 2 is distinct;
-    # doc 3 repeats the shared chunk twice (counts as one doc, two occurrences)
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=0, text="a b c d x y z w"),
-            Row(doc_id=1, text="a b c d q r s t"),
-            Row(doc_id=2, text="m n o p"),
-            Row(doc_id=3, text="a b c d a b c d"),
-        ]
-    )
-    out = {
-        r["chunk_text"]: r
-        for r in chunk_dup_spans(docs, "doc_id", "text", width=4).collect()
-    }
-    assert set(out) == {"a b c d"}
-    r = out["a b c d"]
-    assert r["n_docs"] == 3 and r["n_occurrences"] == 4 and r["first_doc"] == 0
-
-
-def test_chunk_dup_spans_partial_tail_chunk(spark):
-    # trailing partial chunks are real chunks: both docs end in "tail bit"
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=0, text="p q r s tail bit"),
-            Row(doc_id=1, text="u v w x tail bit"),
-        ]
-    )
-    out = chunk_dup_spans(docs, "doc_id", "text", width=4).collect()
-    assert [(r["chunk_text"], r["n_docs"]) for r in out] == [("tail bit", 2)]
 
 
 def test_misra_gries_candidates_superset_guarantee(spark):
@@ -166,29 +134,3 @@ def test_semantic_dedup_zero_vector_excluded(spark):
     out = semantic_dedup(emb, cents, 0.95).collect()
     assert {r["vec_id"] for r in out} == {2}
     assert out[0]["kept_by"] == 1
-
-
-def test_minhash_cross_pairs_hand_values(spark):
-    # corpus doc 1 is a near-copy of bench doc 100; doc 2 is unrelated.
-    # the cross variant must find (1, 100) and must NOT pair corpus docs
-    # with each other even when they'd collide (3 and 1 are identical).
-    from fxspark.ops.dedup import minhash_cross_pairs
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus = spark.createDataFrame(
-        [
-            Row(doc_id=1, text=base + " mu"),
-            Row(doc_id=2, text="one two three four five six seven"),
-            Row(doc_id=3, text=base + " mu"),
-        ]
-    )
-    bench = spark.createDataFrame([Row(doc_id=100, text=base + " nu")])
-    got = {
-        (r["doc_id"], r["bench_id"]): r["jaccard"]
-        for r in minhash_cross_pairs(
-            corpus, bench, "doc_id", "text", n=3, k=64, bands=16,
-            threshold=0.5, hash_fn="md5_60",
-        ).collect()
-    }
-    assert set(got) == {(1, 100), (3, 100)}
-    assert all(0.5 <= j <= 1.0 for j in got.values())

@@ -5,6 +5,7 @@ the entire reason OPTIMIZE ZORDER exists."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -106,3 +107,34 @@ def test_hilbert_index_resolves_the_callers_own_attribute_refs(spark):
     got = sorted(tuple(r) for r in out2.filter(df2["x"] >= 0).collect())
     assert got == sorted(tuple(r) for r in out1.collect())
     assert len(got) == 100
+
+
+def test_zvalue_bitspread_matches_floor_div_reference(spark):
+    from fxspark.ops.layout import zvalue
+
+    def ref(a: int, b: int, bits: int) -> int:
+        z = 0
+        for i in range(bits):
+            z += ((a >> i) & 1) * 2 ** (2 * i) + ((b >> i) & 1) * 2 ** (2 * i + 1)
+        return z
+
+    rows = [(0, 0), (1, 0), (0, 1), (65535, 65535), (12345, 54321),
+            (2**30 - 1, 17), (3, 2**30 - 1), (2**31 - 1, 2**31 - 1)]
+    df = spark.createDataFrame(rows, "a long, b long")
+    # bits=31 is the widest supported coordinate: bit 30 of b lands at
+    # position 61, still inside the long's non-negative range. bits=32
+    # would put bit 31 of b in the sign bit and diverge from the
+    # unbounded-integer SQL twin — capped with a ValueError (round 18).
+    for bits in (16, 31):
+        lim = (1 << bits) - 1
+        got = {
+            (r["a"], r["b"]): r["z"]
+            for r in df.select(
+                "a", "b", zvalue(F.col("a"), F.col("b"), bits).alias("z")
+            ).collect()
+        }
+        for a, b in rows:
+            assert got[(a, b)] == ref(a & lim, b & lim, bits), (a, b, bits)
+    for bad_bits in (32, 33):
+        with pytest.raises(ValueError):
+            zvalue(F.col("a"), F.col("b"), bad_bits)

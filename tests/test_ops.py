@@ -2,8 +2,8 @@
 
 The reference has no tests (SURVEY.md §5); this suite encodes the invariants
 its behavior implies: upsert idempotence/last-writer-wins, window-rank vs
-groupBy-max agreement, second-latest semantics, as-of join vs a naive
-per-row lookup, and MinHash-LSH agreeing with exact Jaccard.
+groupBy-max agreement, second-latest semantics, and as-of join vs a naive
+per-row lookup. The deduplication tests live in ``test_dedup.py``.
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from fxspark.ops.asof import asof_join, nth_before_cutoff
-from fxspark.ops.dedup import jaccard_pairs, minhash_lsh_pairs
 from fxspark.ops.latest import (
     dedup_latest,
     grouped_max,
@@ -174,21 +173,6 @@ def test_lang_id(spark):
     assert out == ["en", "de", "fr", "unknown"]
 
 
-def test_minhash_lsh_agrees_with_exact(spark, sf_dir):
-    """LSH candidates + exact verification must reproduce the exact
-    jaccard_pairs result at the 0.8 threshold (high-recall band config)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    exact = {
-        (r["id_a"], r["id_b"]) for r in
-        jaccard_pairs(docs, "doc_id", "text", 3, 0.8).collect()
-    }
-    lsh = {
-        (r["id_a"], r["id_b"]) for r in
-        minhash_lsh_pairs(docs, "doc_id", "text", 3, 64, 16, 0.8).collect()
-    }
-    assert lsh == exact
-
-
 def test_pct_change_golden(spark):
     """Golden-output format parity: PDF p.5 `USDEUR 0.896100 0.20%` —
     0.20% must print with two decimals."""
@@ -239,35 +223,6 @@ def test_rolling_fingerprint(spark):
     df = spark.createDataFrame([Row(txt=t) for t in texts])
     got = [r[0] for r in df.select(rolling_fingerprint(F.col("txt"))).collect()]
     assert got == [py_fp(t) for t in texts]
-
-
-def test_simhash_tracks_similarity(spark):
-    """Hamming(simhash) must be 0 for identical token sets, small for a
-    one-token edit, and large for disjoint vocabularies."""
-    from fxspark.ops.dedup import simhash_pairs
-
-    # ~50 distinct tokens: enough votes per bit that a one-token edit moves
-    # only a few bits (simhash is meaningless on tiny token sets)
-    base = (
-        "the quick brown fox jumps over a lazy dog near an old river bank "
-        "while seven curious ravens watch from tall birch trees and count "
-        "every passing cloud above those quiet green meadows where small "
-        "children gather ripe berries during warm august afternoons singing "
-        "ancient folk songs their grandparents taught them long ago"
-    )
-    edited = base.replace("lazy", "sleepy")
-    other = "completely different words about spark catalyst tungsten shuffles"
-    df = spark.createDataFrame(
-        [Row(doc_id=1, text=base), Row(doc_id=2, text=edited),
-         Row(doc_id=3, text=base), Row(doc_id=4, text=other)]
-    )
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_pairs(df, "doc_id", "text", n=1, max_hamming=7).collect()
-    }
-    assert pairs[(1, 3)] == 0                      # identical
-    assert (1, 2) in pairs and pairs[(1, 2)] > 0   # near-dup: close but not 0
-    assert (1, 4) not in pairs                     # disjoint: beyond threshold
 
 
 def test_rp_lsh_equals_exact_within_bucket(spark, sf_dir):
@@ -334,23 +289,6 @@ def test_cosine_pairs_blocked_matches_plain(spark, sf_dir):
         for r in cosine_pairs_blocked(emb, 0.3, n_blocks=4).collect()
     }
     assert blocked == plain
-
-
-def test_jaccard_prefix_matches_plain(spark, sf_dir):
-    """Prefix-filtered set-similarity join must reproduce the plain
-    inverted-index result exactly (the filter lemma is lossless)."""
-    from fxspark.ops.dedup import jaccard_pairs_prefix
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plain = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_pairs(docs, "doc_id", "text", 3, 0.6).collect()
-    }
-    pref = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_pairs_prefix(docs, "doc_id", "text", 3, 0.6).collect()
-    }
-    assert pref == plain
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
@@ -442,18 +380,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert pruned.count() == expect
 
 
-def test_dup_clusters_chain_and_islands(spark):
-    """CC over pairs: a chain {1-2, 2-3} and an island {7-9} must collapse
-    to min-id clusters, regardless of pair orientation."""
-    from fxspark.ops.dedup import dup_clusters
-
-    pairs = spark.createDataFrame(
-        [Row(id_a=2, id_b=3), Row(id_a=1, id_b=2), Row(id_a=9, id_b=7)]
-    )
-    got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
-
-
 def test_approx_stats_within_error_bounds(spark, sf_dir):
     """KMV (k=64) distinct estimate within 3·rsd = 3/√63 of exact; the
     deterministic-sample median within the exact p35–p65 band (a 25% sample
@@ -536,39 +462,6 @@ def test_compact_small_files(spark, tmp_path, sf_dir):
     assert abs(back.agg(F.sum("value")).collect()[0][0] - total) < 1e-6
 
 
-def test_dup_clusters_string_ids(spark):
-    """The size-adaptive fast path must stay type-generic (string ids work,
-    not just longs)."""
-    from fxspark.ops.dedup import dup_clusters
-
-    pairs = spark.createDataFrame(
-        [Row(id_a="b", id_b="c"), Row(id_a="a", id_b="b"), Row(id_a="x", id_b="y")]
-    )
-    got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()}
-    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-
-
-def test_dup_clusters_label_propagation_matches_union_find(spark, monkeypatch):
-    """Above the size gate dup_clusters runs distributed label propagation;
-    with the gate at 0 both fixtures above take that path and must give
-    the union-find path's (doc_id, cluster_id)."""
-    from fxspark.ops import dedup
-
-    fixtures = [
-        [Row(id_a=2, id_b=3), Row(id_a=1, id_b=2), Row(id_a=9, id_b=7)],
-        [Row(id_a="b", id_b="c"), Row(id_a="a", id_b="b"), Row(id_a="x", id_b="y")],
-    ]
-
-    def clusters(rows):
-        out = dedup.dup_clusters(spark.createDataFrame(rows))
-        return sorted((r["doc_id"], r["cluster_id"]) for r in out.collect())
-
-    union_find = [clusters(rows) for rows in fixtures]
-    monkeypatch.setattr(dedup, "SMALL_GRAPH_PAIRS", 0)
-    assert [clusters(rows) for rows in fixtures] == union_find
-    assert union_find[0] == [(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)]
-
-
 def test_compact_idempotent_rerun(spark, tmp_path, sf_dir):
     """A second compact over the same path succeeds (stale .old residue must
     not wedge the swap)."""
@@ -582,47 +475,6 @@ def test_compact_idempotent_rerun(spark, tmp_path, sf_dir):
     compact(spark, path)
     compact(spark, path)
     assert spark.read.parquet(path).count() == n_rows
-
-
-def test_edit_distance_pairs_lossless_vs_brute(spark):
-    """SymSpell deletion-neighborhood candidates must recover exactly the
-    brute-force Levenshtein-<=1 pair set (sub/ins/del all covered)."""
-    from fxspark.ops.dedup import edit_distance_pairs
-    import itertools
-
-    words = ["kitten", "mitten", "kittenz", "kitte", "sitting", "abc", "abd",
-             "xyz", "kitten"]
-    rows = [Row(id=i, k=w) for i, w in enumerate(words)]
-    df = spark.createDataFrame(rows)
-    got = {(r.id_a, r.id_b, r.dist)
-           for r in edit_distance_pairs(df, "id", "k", max_dist=1).collect()}
-
-    def lev(a, b):
-        dp = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            prev, dp[0] = dp[0], i
-            for j, cb in enumerate(b, 1):
-                prev, dp[j] = dp[j], min(dp[j] + 1, dp[j - 1] + 1,
-                                         prev + (ca != cb))
-        return dp[-1]
-
-    want = {(i, j, lev(words[i], words[j]))
-            for i, j in itertools.combinations(range(len(words)), 2)
-            if lev(words[i], words[j]) <= 1}
-    assert got == want
-
-
-def test_edit_distance_pairs_depth2(spark):
-    """max_dist=2 uses the delete-2 neighborhood and still verifies exactly."""
-    from fxspark.ops.dedup import edit_distance_pairs
-
-    rows = [Row(id=1, k="abcdef"), Row(id=2, k="abdef"),   # 1 deletion
-            Row(id=3, k="abXdYf"), Row(id=4, k="zzzzzz")]  # 2 subs / far
-    got = {(r.id_a, r.id_b, r.dist)
-           for r in edit_distance_pairs(
-               spark.createDataFrame(rows), "id", "k", max_dist=2).collect()}
-    assert (1, 2, 1) in got and (1, 3, 2) in got
-    assert not any(4 in (a, b) for a, b, _ in got)
 
 
 def test_redact_pii_kinds(spark):
@@ -665,31 +517,6 @@ def test_rp_project_preserves_neighbors(spark):
         rp_project(F.transform(F.col("v"), lambda x: x * 2), planes).alias("p")
     ).collect()[0]["p"]
     assert all(abs(b - 2 * a) < 1e-12 for a, b in zip(p1, p2))
-
-
-def test_ngram_overlap_broadcast_contamination(spark):
-    """Contamination = shared distinct n-grams with the benchmark side;
-    docs without overlap are absent; counts match a hand computation."""
-    from pyspark.sql import Row
-
-    from fxspark.ops.dedup import ngram_overlap
-
-    train = spark.createDataFrame([
-        Row(id=1, text="the quick brown fox jumps over the lazy dog"),
-        Row(id=2, text="completely different words entirely here now"),
-        Row(id=3, text="quick brown fox jumps high quick brown fox jumps"),
-    ])
-    bench = spark.createDataFrame([
-        Row(id=100, text="a quick brown fox jumps today"),
-    ])
-    out = {
-        r["id"]: (r["n_shared_grams"], r["n_bench_docs"])
-        for r in ngram_overlap(train, bench, "id", "text", n=4).collect()
-    }
-    # bench 4-grams: {a quick brown fox, quick brown fox jumps, brown fox jumps today}
-    assert out[1] == (1, 1)       # shares "quick brown fox jumps"
-    assert out[3] == (1, 1)       # same single shared gram (distinct)
-    assert 2 not in out           # no overlap -> absent
 
 
 def test_quality_signals_hand_values(spark):
@@ -830,39 +657,6 @@ def test_ngram_udtf_matches_builtin_expression(spark):
         "LATERAL ngrams_udtf(t.text, 3) g"
     ).collect()
     assert {(r["id"], r["pos"], r["gram"]) for r in sql_rows} == via_expr
-
-
-def test_jaccard_freq_cap_consistent_universe(spark):
-    """With max_shingle_freq set, BOTH the intersection and the set sizes
-    must use the capped shingle universe (ADVICE r1): a pair whose only
-    shared shingles are ubiquitous drops out, and surviving pairs score
-    their jaccard over the filtered sets, not the raw ones."""
-    from pyspark.sql import Row
-
-    from fxspark.ops.dedup import jaccard_pairs
-
-    # 'x y z' trigram appears in ALL four docs (ubiquitous); docs 1/2 also
-    # share a rare tail, docs 3/4 share ONLY the ubiquitous part.
-    rows = [
-        Row(id=1, text="x y z q r s t"),
-        Row(id=2, text="x y z q r s u"),
-        Row(id=3, text="x y z a b"),
-        Row(id=4, text="x y z c d"),
-    ]
-    df = spark.createDataFrame(rows)
-    capped = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_pairs(
-            df, "id", "text", n=3, threshold=0.3, max_shingle_freq=2
-        ).collect()
-    }
-    # docs 3,4 vanish: their only common shingle 'x y z' has df=4 > cap
-    assert all(p == (1, 2) for p in capped)
-    # capped universes (df<=2): doc1 {y z q, z q r, q r s, r s t},
-    # doc2 {y z q, z q r, q r s, r s u}; shared = 3
-    # jaccard over the CAPPED sets = 3 / (4+4-3) = 0.6 (raw sets would
-    # give 4/6 — the old biased formula mixed the two)
-    assert abs(capped[(1, 2)] - 0.6) < 1e-9
 
 
 def test_range_join_pre_epoch_floor_bins(spark):

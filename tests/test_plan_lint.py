@@ -249,6 +249,8 @@ CHECKPOINT_HEAVY = [
     "part_copurchase_ppr",           # graph.py: shared edge build + iterations
     "part_copurchase_clustering",    # graph.py: triangle engine internals
     "minhash_lsh_pairs",             # dedup.py: shingle sets + signatures
+    "doc_jaccard_pairs_capped",      # dedup.py: capped inverted index
+    "doc_shingle_containment",       # dedup.py: doc sets + capped index
     "brand_triples_apriori",         # itemsets.py: pair frame + support scalar
     "event_funnel_stages",           # windows.py: per-iteration checkpoint
 ]

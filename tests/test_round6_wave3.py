@@ -1,5 +1,6 @@
 """Round-6 third-wave operators: nearest-in-time join, gaps-and-islands
-streaks, bounded k-smallest-per-key, Z-set aggregate maintenance."""
+streaks, bounded k-smallest-per-key, Z-set aggregate maintenance.
+(Containment scoring lives in ``test_dedup.py``.)"""
 
 from __future__ import annotations
 
@@ -158,48 +159,3 @@ def test_delta_agg_matches_recompute_and_drops_retracted_key(spark):
     assert out["a"]["n_rows"] == 3 and float(out["a"]["v"]) == 60.0
     assert out["b"]["n_rows"] == 1 and float(out["b"]["v"]) == 5.0
     assert out["d"]["n_rows"] == 1 and float(out["d"]["v"]) == 7.0
-
-
-def test_containment_pairs_finds_partial_copy(spark):
-    from fxspark.ops.dedup import containment_pairs
-
-    quote = "alpha beta gamma delta epsilon zeta eta theta"
-    long_doc = quote + " iota kappa " + " ".join(f"w{i}" for i in range(30))
-    other = "one two three four five six seven eight nine ten"
-    df = spark.createDataFrame(
-        [(1, quote), (2, long_doc), (3, other)], "doc_id long, text string"
-    )
-    rows = containment_pairs(
-        df, "doc_id", "text", n=3, min_shared=2,
-        max_shingle_freq=50, threshold=0.5,
-    ).collect()
-    assert len(rows) == 1
-    (r,) = rows
-    # every trigram of the quote appears in the long doc -> containment 1.0
-    assert (r["id_a"], r["id_b"]) == (1, 2)
-    assert r["containment"] == 1.0
-    assert r["shared"] == r["sz_a"]
-
-
-def test_containment_pairs_respects_df_cap(spark):
-    from fxspark.ops.dedup import containment_pairs
-
-    # a shingle shared by 3 docs is dropped at max_shingle_freq=2, so the
-    # only surviving evidence between docs 1 and 2 is their private overlap
-    common = "x y z"
-    df = spark.createDataFrame(
-        [
-            (1, common + " a b c d e"),
-            (2, common + " a b c f g"),
-            (3, common + " p q r s t"),
-        ],
-        "doc_id long, text string",
-    )
-    capped = containment_pairs(
-        df, "doc_id", "text", n=3, min_shared=1,
-        max_shingle_freq=2, threshold=0.0,
-    ).collect()
-    pairs = {(r["id_a"], r["id_b"]) for r in capped}
-    assert (1, 2) in pairs  # still linked by 'a b c' etc.
-    # doc 3 shares ONLY the capped common shingles with 1/2 -> no pair
-    assert all(3 not in p for p in pairs)
