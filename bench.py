@@ -349,6 +349,15 @@ def main() -> None:
     # expected somewhere every sweep). Additions-only: the one-line JSON
     # contract and the `queries` map are unchanged.
     rep_counts: dict[str, int] = {}
+    # Janino compilations during each entry's timed reps (CodegenMetrics
+    # delta). A warm-up's classes survive into the timed reps only while the
+    # session's codegen cache holds the working set, so a nonzero count
+    # marks reps that paid for codegen again. Additions-only, full record.
+    compiles: dict[str, int] = {}
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
 
     def timed(name, reps, sink, adaptive_secs=None):
         """One warm-up + reps timed runs; a failing query records -1 and the
@@ -366,10 +375,12 @@ def main() -> None:
             if adaptive_secs is not None and warm > adaptive_secs:
                 reps = max(reps, 3)
             runs = []
+            c0 = compiled()
             for _ in range(reps):
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
+            compiles[name] = compiled() - c0
             sink[name] = round(statistics.median(runs), 4)
             if adaptive_secs is not None:
                 # extension-sweep path only: the headline loop's rep count
@@ -389,7 +400,8 @@ def main() -> None:
         probe run that sets the rep count (EXT_REPS, promoted to ≥3 when the
         probe exceeds 1 s) and counts as the first timed rep; the median of
         those reps is recorded."""
-        fn()  # warm (also absorbs codegen)
+        fn()  # warm (also absorbs codegen, see the warm-up sweep below)
+        c0 = compiled()
         t0 = time.perf_counter()
         fn()
         warm = time.perf_counter() - t0
@@ -399,6 +411,7 @@ def main() -> None:
             t0 = time.perf_counter()
             fn()
             runs.append(time.perf_counter() - t0)
+        compiles[label] = compiled() - c0
         sink[label] = round(statistics.median(runs), 4)
         rep_counts[label] = len(runs)
         print(f"# ext {label}: {sink[label]:.3f}s (reps {len(runs)})",
@@ -432,7 +445,10 @@ def main() -> None:
     # can't absorb JVM/JIT/classloader ramp — the driver's r6 capture read the
     # first-executed queries at 2-3.5x their idle medians. One untimed sweep
     # of the whole headline list loads every code path (scan, hash-agg, sort,
-    # window, join, codegen) before any clock starts.
+    # window, join, codegen) before any clock starts. Its compiled classes
+    # last across queries only because the session's codegen cache holds
+    # the whole sweep's working set (session.CODEGEN_CACHE_ENTRIES; Spark's
+    # default 100 entries would evict them); `compiles` records the check.
     for name in [n for n in HEADLINE if n in QUERIES]:
         try:
             QUERIES[name](spark, sf_dir).write.format("noop").mode(
@@ -814,6 +830,7 @@ def main() -> None:
         "queries": timings,
         "extensions": ext_timings,
         "extensions_total": round(sum(ext_timings.values()), 4),
+        "compiles": compiles,
         "sf": sf,
         "capture": {
             "warmup_sweep": True,

@@ -106,6 +106,19 @@ def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     ).withColumn("_sz", F.size("_sh"))
 
 
+def _postings(sets_: DataFrame, *carry: str) -> DataFrame:
+    """One ``(_id, *carry, _s)`` row per document and shingle of ``sets_``.
+
+    ``explode_outer`` plus a non-NULL filter, not ``explode``: over a plain
+    ``_sh`` column Spark infers a ``size(_sh) > 0`` filter for an explode
+    and pushes it below the projection that defines ``_sh``, so sets that
+    are not materialized would run the whole shingling twice per document.
+    No shingle is NULL, so the rows are those of ``explode``."""
+    return sets_.select("_id", *carry, F.explode_outer("_sh").alias("_s")).filter(
+        F.col("_s").isNotNull()
+    )
+
+
 def _bucket_pairs(
     frame: DataFrame, bucket_cols: list[str], carry: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -201,7 +214,7 @@ def jaccard_pairs(
     hide by changing both sides of that comparison.
     """
     sets_ = _shingle_sets(df, id_col, text_col, n)
-    inv = sets_.select("_id", "_sz", F.explode("_sh").alias("_s"))
+    inv = _postings(sets_, "_sz")
     if max_shingle_freq is not None:
         freq = inv.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
         inv = (
@@ -447,7 +460,7 @@ def minhash_signature(
 
 
 def _signature_from_sets(sets_: DataFrame, k: int, hash_fn: str = "xxhash64") -> DataFrame:
-    inv = sets_.select("_id", F.explode("_sh").alias("_s")).select(
+    inv = _postings(sets_).select(
         "_id", F.pmod(base_hash(F.col("_s"), hash_fn), F.lit(_MERSENNE_31)).alias("_x")
     )
     # One F.expr per permutation instead of a 5-deep Column-API tree:

@@ -33,6 +33,19 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+# Entries in Spark's JVM-wide cache of Janino-compiled generated classes
+# (static conf, default 100). Keys are the generated source text, so a hit
+# only ever returns a class compiled from identical code. The registry's
+# working set is far above the default: one noop-forced sweep of all 249
+# queries at sf0.001 (local[4], 8 shuffle partitions, AQE on) compiles 3,569
+# classes with this cache, and the five iterative_mix queries alone need
+# ~270, so at 100 entries every pass evicted and recompiled them all (7-10 ms
+# each). 8192 is over twice the registry's count. Re-measure: the count of
+# ``org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()``
+# (via ``spark._jvm``) before and after a sweep in a fresh JVM whose cache
+# is larger than the sweep (SCALE.md §27).
+CODEGEN_CACHE_ENTRIES = 8192
+
 
 def get_spark(app_name: str = "fxspark", master: str | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -70,6 +83,7 @@ def get_spark(app_name: str = "fxspark", master: str | None = None) -> SparkSess
             "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
         )
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         # Complete AQE's join ladder: broadcast when the build side fits
         # (above) → SHUFFLED HASH when every build partition fits a local
         # map (this config) → sort-merge only as the true fallback. Off by

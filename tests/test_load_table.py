@@ -1,4 +1,5 @@
-"""load_table's plan cache: a cache hit must behave exactly like a miss."""
+"""load_table's plan cache: a cache hit must behave exactly like a miss,
+conf pins included."""
 
 from __future__ import annotations
 
@@ -53,3 +54,18 @@ def test_load_table_rereads_nanos_columns_of_a_rewritten_file(
     second = load_table(spark, str(tmp_path), "t")
     assert dict(second.dtypes)["ts"] == "timestamp"
     assert second.collect()[0]["ts"] == want
+
+
+def test_load_table_repins_confs_on_cache_hit(spark, sf_dir):
+    from fxspark.session import load_table
+
+    load_table(spark, sf_dir, "events")  # populate cache
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        load_table(spark, sf_dir, "events")  # HIT must still re-pin
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert (
+            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")

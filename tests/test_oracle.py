@@ -52,6 +52,24 @@ def test_build_and_run_leave_session_conf_unchanged(name, spark, sf_dir):
     assert spark.conf.getAll == before
 
 
+def test_second_pass_reuses_generated_code(spark, sf_dir):
+    """The five queries' generated classes (~240 per pass here) fit the
+    session's codegen cache, so a second pass compiles (almost) nothing. At
+    Spark's default of 100 entries every pass evicted and recompiled them
+    all; AQE may still plan a few fresh classes, hence a limit above 0."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_pass():
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        for name in ITERATIVE:
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite").save()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    run_pass()
+    assert run_pass() < 25
+
+
 @pytest.mark.parametrize("name", ITERATIVE + ("events_hilbert_stats",))
 def test_result_same_with_warm_and_cold_table_cache(name, spark, sf_dir):
     """A build with load_table's cache cleared and a rebuild whose loads

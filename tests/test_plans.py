@@ -7,6 +7,8 @@ perf regressions from hiding behind still-correct results.
 
 from __future__ import annotations
 
+import pytest
+
 from fxspark.queries import QUERIES
 
 
@@ -175,6 +177,48 @@ def test_minhash_cross_broadcasts_bench_side(spark, sf_dir):
     plan = _plan(spark, sf_dir, "benchmark_minhash_contamination")
     assert "BroadcastHashJoin" in plan, plan[:3000]
     assert "SortMergeJoin" not in plan, plan[:3000]
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda d, docs: d.minhash_signature(docs, "doc_id", "text", k=8),
+        lambda d, docs: d.minhash_lsh_pairs(
+            docs, "doc_id", "text", k=8, bands=4, verify=False
+        ),
+        lambda d, docs: d.jaccard_pairs(docs, "doc_id", "text", threshold=0.3),
+    ],
+    ids=["minhash_signature", "minhash_lsh_pairs_unverified", "jaccard_pairs"],
+)
+def test_dedup_ops_shingle_each_document_once(spark, monkeypatch, op):
+    """The shingling expression (its one ``sequence(``) appears once across
+    the executed plans of the op's result and of every frame it
+    checkpoints. An explode over an unmaterialized ``_sh`` column made Spark
+    infer a ``size(_sh) > 0`` filter below the projection and shingle every
+    document twice."""
+    from fxspark.ops import dedup
+
+    def final_plan(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y"), (4, None)],
+        "doc_id int, text string",
+    )
+    plans = []
+    checkpoint = type(docs).localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        plans.append(final_plan(self))
+        return out
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", recording_checkpoint)
+    out = op(dedup, docs)
+    out.collect()
+    plans.append(final_plan(out))
+    assert sum(p.count("sequence(") for p in plans) == 1, "\n".join(plans)
 
 
 def test_funnel_stage_filters_reach_scan(spark, sf_dir):
