@@ -506,6 +506,48 @@ def attribute_conversions(
     return out.select(*sel)
 
 
+def _conversion_touch_pairs(
+    events: DataFrame,
+    keys: list[str],
+    id_col: str,
+    ts_col: str,
+    type_col: str,
+    conversion_type: str,
+    touch_types: list[str],
+    lookback_s: int,
+    value_col: str | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The conversion frame and its candidate pairs: each touch of the
+    same key at most ``lookback_s`` before (or at) the conversion, from the
+    binned interval range join. Linear and first-touch attribution share
+    these and differ only in how they credit."""
+    from fxspark.ops.asof import range_join
+
+    conversions = events.filter(F.col(type_col) == conversion_type).select(
+        [F.col(c) for c in keys]
+        + [
+            F.col(id_col).alias("conversion_id"),
+            F.col(ts_col).alias("conversion_ts"),
+        ]
+        + ([F.col(value_col).alias("conversion_value")] if value_col else [])
+    )
+    touches = events.filter(F.col(type_col).isin(touch_types)).select(
+        *keys,
+        F.col(id_col).alias("touch_id"),
+        F.col(ts_col).alias("touch_ts"),
+        F.col(type_col).alias("touch_type"),
+    )
+    pairs = range_join(
+        conversions,
+        touches,
+        "conversion_ts",
+        "touch_ts",
+        tolerance_s=lookback_s,
+        keys=keys,
+    ).filter(F.col("touch_ts") <= F.col("conversion_ts"))
+    return conversions, pairs
+
+
 def attribute_linear(
     events: DataFrame,
     keys: str | list[str],
@@ -533,31 +575,11 @@ def attribute_linear(
     """
     from pyspark.sql import Window
 
-    from fxspark.ops.asof import range_join
-
     keys = [keys] if isinstance(keys, str) else list(keys)
-    conversions = events.filter(F.col(type_col) == conversion_type).select(
-        [F.col(c) for c in keys]
-        + [
-            F.col(id_col).alias("conversion_id"),
-            F.col(ts_col).alias("conversion_ts"),
-        ]
-        + ([F.col(value_col).alias("conversion_value")] if value_col else [])
+    _, pairs = _conversion_touch_pairs(
+        events, keys, id_col, ts_col, type_col, conversion_type,
+        touch_types, lookback_s, value_col,
     )
-    touches = events.filter(F.col(type_col).isin(touch_types)).select(
-        *keys,
-        F.col(id_col).alias("touch_id"),
-        F.col(ts_col).alias("touch_ts"),
-        F.col(type_col).alias("touch_type"),
-    )
-    pairs = range_join(
-        conversions,
-        touches,
-        "conversion_ts",
-        "touch_ts",
-        tolerance_s=lookback_s,
-        keys=keys,
-    ).filter(F.col("touch_ts") <= F.col("conversion_ts"))
     w = Window.partitionBy(*keys, "conversion_id")
     out = pairs.withColumn(
         "credit", F.lit(1.0) / F.count(F.lit(1)).over(w)
@@ -592,31 +614,11 @@ def attribute_first_touch(
     the left join back to the conversion set; equal-timestamp touches
     resolve by the smaller ``id_col``, deterministically.
     """
-    from fxspark.ops.asof import range_join
-
     keys = [keys] if isinstance(keys, str) else list(keys)
-    conversions = events.filter(F.col(type_col) == conversion_type).select(
-        [F.col(c) for c in keys]
-        + [
-            F.col(id_col).alias("conversion_id"),
-            F.col(ts_col).alias("conversion_ts"),
-        ]
-        + ([F.col(value_col).alias("conversion_value")] if value_col else [])
+    conversions, pairs = _conversion_touch_pairs(
+        events, keys, id_col, ts_col, type_col, conversion_type,
+        touch_types, lookback_s, value_col,
     )
-    touches = events.filter(F.col(type_col).isin(touch_types)).select(
-        *keys,
-        F.col(id_col).alias("touch_id"),
-        F.col(ts_col).alias("touch_ts"),
-        F.col(type_col).alias("touch_type"),
-    )
-    pairs = range_join(
-        conversions.select(*keys, "conversion_id", "conversion_ts"),
-        touches,
-        "conversion_ts",
-        "touch_ts",
-        tolerance_s=lookback_s,
-        keys=keys,
-    ).filter(F.col("touch_ts") <= F.col("conversion_ts"))
     first = pairs.groupBy(*keys, "conversion_id").agg(
         F.min_by(
             F.struct("touch_ts", "touch_type", "touch_id"),

@@ -114,26 +114,38 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
     return tuple(f.name for f in schema if str(f.type) == "timestamp[ns]")
 
 
-# Plan cache for load_table: (abspath, mtime) → (session, DataFrame).
+# Plan cache for load_table: (abspath, mtime) → (session, relation, fixes).
 #
-# This caches table METADATA (the analyzed read plan), never results — every
-# action on the returned frame still scans the parquet from disk, so bench
-# and oracle runs always recompute (optimization-round contract). It is the
-# DataFrame analogue of a catalog's table registration: without it every
+# This caches table METADATA (the resolved parquet relation), never results —
+# every action on the returned frame still scans the parquet from disk, so
+# bench and oracle runs always recompute (optimization-round contract). It is
+# the DataFrame analogue of a catalog's table registration: without it every
 # load_table call re-lists the file, re-reads the footer schema, and re-runs
-# the nanos/NTZ normalization analysis. A hit re-aliases the cached frame with
-# one ``toDF`` (fresh attribute IDs, so two loads of one table self-join
-# exactly like two misses). Measured at sf0.001, local[1] on a 4-vCPU VM,
-# median of 30: a hit costs 31 / 21 / 35 ms (events / nation / lineitem)
-# against 253 / 195 / 247 ms per miss. With ~600 scan sites across the
+# the nanos/NTZ normalization analysis. With ~600 scan sites across the
 # 249-query registry that saves over a minute per sweep of pure driver-side
 # metadata work (the driver should do almost no data work — including
 # repeated planning).
 #
+# A hit builds a fresh relation: the cached one's ``newInstance()`` (the same
+# file index and schema under new attribute IDs, which is how Spark itself
+# dedupes a relation read twice), then the cached timestamp fixes. So two
+# loads of one table are two distinct relations, exactly like two misses.
+# Re-aliasing the cached frame instead (``toDF``, a Project over the SHARED
+# relation) broke with AQE off: an aggregate of the second load, checkpointed
+# and joined back to that load, fails analysis with ``[INTERNAL_ERROR]
+# Failure when resolving conflicting references in Join`` (the checkpointed
+# relation inherits the Project's alias IDs, a conflict the analyzer leaves
+# unresolved). Measured at sf0.001, local[1] on a 4-vCPU VM (median over 6
+# rounds of each round's median of 30 loads): a hit costs 12 / 6 / 11 ms
+# (events / nation / lineitem; the timestamp fixes' analysis is ~6 ms of
+# it) against 100-170 ms per miss; the re-aliasing hit cost 5 / 5 / 6 ms.
+#
 # Safety: the key carries the file mtime (a rebuilt fixture at the same path
 # misses), and the value carries the owning session (a different session —
 # e.g. the driver gate's own — misses and rebuilds under its own confs).
-_TABLE_CACHE: dict[tuple[str, float], tuple[SparkSession, DataFrame]] = {}
+_TABLE_CACHE: dict[
+    tuple[str, float], tuple[SparkSession, DataFrame, dict]
+] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -159,16 +171,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         cache_key = (os.path.abspath(path), os.path.getmtime(path))
     except OSError:
         cache_key = None
-    if cache_key is not None:
-        hit = _TABLE_CACHE.get(cache_key)
-        if hit is not None and hit[0] is spark:
-            return hit[1].toDF(*hit[1].columns)
-    df = spark.read.parquet(path)
+    hit = _TABLE_CACHE.get(cache_key) if cache_key is not None else None
+    if hit is not None and hit[0] is spark:
+        _, relation, fixes = hit
+        plan = relation._jdf.queryExecution().analyzed().newInstance()
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, plan
+        )
+        df = DataFrame(jdf, spark)
+        return df.withColumns(fixes) if fixes else df
+    relation = spark.read.parquet(path)
     from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampNTZType
 
-    for c in _nanos_timestamp_cols(path):
-        # integer `div` (not `/`): epoch-ns exceeds double's 2^53 exactness
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    # integer `div` (not `/`): epoch-ns exceeds double's 2^53 exactness
+    fixes = {
+        c: F.expr(f"timestamp_micros(`{c}` div 1000)")
+        for c in _nanos_timestamp_cols(path)
+    }
     # TIMESTAMP(MICROS, isAdjustedToUTC=false) columns (the round-4
     # regenerated testdata stores these instead of NANOS) arrive as
     # TIMESTAMP_NTZ, which Spark's chrono functions (unix_micros & co)
@@ -177,17 +197,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # reader treats naive parquet timestamps, so the oracle differential
     # stays value-identical. The runtime tz pin makes the NTZ→LTZ cast
     # deterministic in the driver's un-configured session too.
-    from pyspark.sql.types import TimestampNTZType
-
-    ntz_cols = [f.name for f in df.schema.fields
-                if isinstance(f.dataType, TimestampNTZType)]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
+    for f in relation.schema.fields:
+        if isinstance(f.dataType, TimestampNTZType):
+            fixes[f.name] = F.col(f.name).cast("timestamp")
     if cache_key is not None:
         if len(_TABLE_CACHE) > 512:  # bound growth across fixture sweeps
             _TABLE_CACHE.clear()
-        _TABLE_CACHE[cache_key] = (spark, df)
-    return df
+        _TABLE_CACHE[cache_key] = (spark, relation, fixes)
+    return relation.withColumns(fixes) if fixes else relation
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

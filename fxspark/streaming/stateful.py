@@ -1,4 +1,4 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``.
+"""Custom stateful streaming operators via ``applyInPandasWithState``.
 
 The reference keeps all cross-run state in MySQL (the table IS the state —
 SURVEY.md §1.2, §3). For per-key derived state that should NOT round-trip
@@ -7,43 +7,77 @@ Streaming's arbitrary-state API is the Spark-first shape: state lives in the
 state store (checkpointed, partitioned by key), updates arrive as Arrow
 batches, and executor loss replays only the failed micro-batch.
 
-Scale notes: state is per-key-small (3 scalars here) and partitioned on the
-grouping key, so the operator scales with distinct keys, not event volume;
-the per-batch work is one shuffle on the key plus an Arrow-batched pandas
-step. Keys that go quiet can be expired via a processing-time timeout —
-kept NoTimeout here because the FX pair universe is tiny and closed
-(110 pairs, ``/root/reference/currency_pairs.csv``).
+Every operator here is one pure ``fold(state, batch) -> (new_state, rows)``
+plus its state DDL, run by the one shell ``_keyed_fold``; the shell owns the
+``applyInPandasWithState`` call, chunk handling, state restore/update and
+the output frame, so those rules change in exactly one place.
+
+Scale notes: state is per-key-small (a few scalars or one k-bounded array)
+and partitioned on the grouping key, so each operator scales with distinct
+keys, not event volume; the per-batch work is one shuffle on the key plus an
+Arrow-batched pandas step. Keys that go quiet can be expired via a
+processing-time timeout — kept NoTimeout here because the FX pair universe
+is tiny and closed (110 pairs, ``/root/reference/currency_pairs.csv``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-def _collect_batch(pdfs, sort_cols=None):
-    """Concatenate one key's Arrow chunks into a single frame and sort
-    ONCE — applyInPandasWithState may deliver a key's micro-batch as
-    multiple chunks, and any per-chunk sort would interleave them and
-    corrupt order-sensitive recurrences (ADVICE r8). Returns ``None``
-    for an empty iterator (a timed-out key under a future timeout
-    policy receives no data). One definition, four operators — the
-    chunk-handling rule must change in exactly one place."""
-    import pandas as pd
-
-    chunks = list(pdfs)
-    if not chunks:
-        return None
-    batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-    return batch.sort_values(sort_cols) if sort_cols else batch
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 
-OUT_SCHEMA = (
-    "ccy_couple string, n_total long, ewma double, last_rate double"
-)
-STATE_SCHEMA = "n_total long, ewma double, last_rate double"
+def _keyed_fold(
+    events: DataFrame,
+    key_col: str,
+    out: Sequence[tuple[str, str]],
+    state_schema: str,
+    init: tuple[Any, ...],
+    fold: Callable[[tuple[Any, ...], Any], tuple[tuple[Any, ...], list]],
+    sort_cols: str | list[str] | None = None,
+) -> DataFrame:
+    """Group ``events`` by ``key_col`` and run ``fold`` over each key's
+    micro-batch, with the key's state carried in the state store (output
+    mode ``update``, no timeout).
+
+    ``fold(state, batch)`` gets the restored state tuple (``init`` for a
+    new key) and the key's whole micro-batch as ONE pandas frame sorted by
+    ``sort_cols`` (``None`` when no rows arrived). It returns the new state
+    and the output rows as tuples of the ``out`` columns; the shell
+    prepends the key. A key's batch may arrive as several Arrow chunks:
+    they are concatenated and sorted once, because a per-chunk sort would
+    interleave them and corrupt order-sensitive recurrences.
+
+    Spark matches the pandas frame to the output schema BY NAME, so the
+    schema is built from the caller's column names — ``out`` lists
+    ``(name, ddl_type)`` after the key, whose type is read from the input
+    schema. Names are backtick-quoted so one that needs quoting (reserved
+    word, dots, spaces) still parses.
+    """
+    key_type = events.schema[key_col].dataType.simpleString()
+    cols = [key_col, *(c for c, _ in out)]
+    out_schema = ", ".join(
+        f"`{c}` {t}" for c, t in [(key_col, key_type), *out]
+    )
+
+    def update(key, pdfs, state):
+        import pandas as pd
+
+        chunks = list(pdfs)
+        batch = None
+        if chunks:
+            batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
+            if sort_cols:
+                batch = batch.sort_values(sort_cols)
+        new_state, rows = fold(state.get if state.exists else init, batch)
+        state.update(new_state)
+        yield pd.DataFrame([(key[0], *r) for r in rows], columns=cols)
+
+    return events.groupBy(key_col).applyInPandasWithState(
+        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    )
 
 
 def stateful_pair_stats(
@@ -59,34 +93,21 @@ def stateful_pair_stats(
     (output mode ``update``).
     """
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],  # noqa: F821
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        n, ewma, last = state.get if state.exists else (0, None, None)
-        batch = _collect_batch(pdfs, order_col)
+    def fold(state, batch):
+        n, ewma, last = state
         if batch is not None:
             for rate in batch[rate_col].astype(float):
                 ewma = rate if ewma is None else alpha * rate + (1 - alpha) * ewma
                 last = rate
                 n += 1
-        state.update((n, ewma, last))
-        yield pd.DataFrame(
-            [{key_col: key[0], "n_total": n, "ewma": ewma, "last_rate": last}]
-        )
+        return (n, ewma, last), [(n, ewma, last)]
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        update, OUT_SCHEMA, STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        events, key_col,
+        [("n_total", "long"), ("ewma", "double"), ("last_rate", "double")],
+        "n_total long, ewma double, last_rate double",
+        (0, None, None), fold, order_col,
     )
-
-
-CUSUM_OUT_SCHEMA = (
-    "user_id long, n_total long, cusum double, n_alerts long"
-)
-CUSUM_STATE_SCHEMA = "n_total long, cum double, low double, n_alerts long"
 
 
 def stateful_cusum(
@@ -111,17 +132,8 @@ def stateful_cusum(
     batch operator on identical event order is pinned by test.
     """
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],  # noqa: F821
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        n, cum, low, n_alerts = (
-            state.get if state.exists else (0, 0.0, 0.0, 0)
-        )
-        batch = _collect_batch(pdfs, order_col)
+    def fold(state, batch):
+        n, cum, low, n_alerts = state
         if batch is not None:
             for v in batch[value_col].astype(float):
                 cum += v - target - slack
@@ -129,29 +141,14 @@ def stateful_cusum(
                 n += 1
                 if cum - min(0.0, low) > threshold:
                     n_alerts += 1
-        state.update((n, cum, low, n_alerts))
-        yield pd.DataFrame(
-            [
-                {
-                    key_col: key[0],
-                    "n_total": n,
-                    "cusum": cum - min(0.0, low),
-                    "n_alerts": n_alerts,
-                }
-            ]
-        )
+        return (n, cum, low, n_alerts), [(n, cum - min(0.0, low), n_alerts)]
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        update,
-        CUSUM_OUT_SCHEMA,
-        CUSUM_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        events, key_col,
+        [("n_total", "long"), ("cusum", "double"), ("n_alerts", "long")],
+        "n_total long, cum double, low double, n_alerts long",
+        (0, 0.0, 0.0, 0), fold, order_col,
     )
-
-
-KMV_OUT_SCHEMA = "event_type string, n_seen long, est_distinct long"
-KMV_STATE_SCHEMA = "n_seen long, mins array<double>"
 
 
 def stateful_kmv_distinct(
@@ -174,52 +171,26 @@ def stateful_kmv_distinct(
     two sorted k-arrays.
     """
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],  # noqa: F821
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
+    def fold(state, batch):
         import hashlib
 
-        import pandas as pd
-
-        n, mins = state.get if state.exists else (0, [])
+        n, mins = state
         mins = list(mins)
-        for pdf in pdfs:
-            n += len(pdf)
+        if batch is not None:
+            n += len(batch)
             hs = [
                 int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16)
                 / float(2**60)
-                for v in pdf[id_col]
+                for v in batch[id_col]
             ]
             mins = sorted(set(mins) | set(hs))[:k]
-        state.update((n, mins))
-        est = (
-            len(mins)
-            if len(mins) < k
-            else int(round((k - 1) / mins[k - 1]))
-        )
-        yield pd.DataFrame(
-            [
-                {
-                    group_col: key[0],
-                    "n_seen": n,
-                    "est_distinct": est,
-                }
-            ]
-        )
+        est = len(mins) if len(mins) < k else int(round((k - 1) / mins[k - 1]))
+        return (n, mins), [(n, est)]
 
-    return events.groupBy(group_col).applyInPandasWithState(
-        update,
-        KMV_OUT_SCHEMA,
-        KMV_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        events, group_col, [("n_seen", "long"), ("est_distinct", "long")],
+        "n_seen long, mins array<double>", (0, []), fold,
     )
-
-
-HIST_OUT_SCHEMA = "event_type string, bin int, cnt long"
-HIST_STATE_SCHEMA = "counts array<long>"
 
 
 def stateful_histogram(
@@ -247,47 +218,24 @@ def stateful_histogram(
     counts is derivable from the last emission.
     """
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],  # noqa: F821
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
+    def fold(state, batch):
         import math
 
-        import pandas as pd
-
-        (counts,) = state.get if state.exists else ([0] * n_bins,)
-        counts = list(counts)
-        for pdf in pdfs:
-            for v in pdf[value_col].astype(float):
+        counts = list(state[0])
+        if batch is not None:
+            for v in batch[value_col].astype(float):
                 # Clamp BOTH sides (the PSI query's edge-bin convention):
                 # edges are declared up-front, so values below `lo` are
                 # expected — an unclamped negative index would silently
                 # increment the top bins via Python list indexing.
-                b = max(
-                    0, min(n_bins - 1, int(math.floor((v - lo) / width)))
-                )
+                b = max(0, min(n_bins - 1, int(math.floor((v - lo) / width))))
                 counts[b] += 1
-        state.update((counts,))
-        yield pd.DataFrame(
-            [
-                {group_col: key[0], "bin": b, "cnt": c}
-                for b, c in enumerate(counts)
-                if c > 0
-            ]
-        )
+        return (counts,), [(b, c) for b, c in enumerate(counts) if c > 0]
 
-    return events.groupBy(group_col).applyInPandasWithState(
-        update,
-        HIST_OUT_SCHEMA,
-        HIST_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        events, group_col, [("bin", "int"), ("cnt", "long")],
+        "counts array<long>", ([0] * n_bins,), fold,
     )
-
-
-DEBOUNCE_OUT_SCHEMA = "user_id long, event_id long, ts timestamp"
-DEBOUNCE_STATE_SCHEMA = "last_us long"
 
 
 def stateful_debounce(
@@ -315,47 +263,28 @@ def stateful_debounce(
     the burst). The batch query remains the source of burst sizes; the
     stream emits the kept events themselves.
     """
+    gap_us = gap_seconds * 1_000_000
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],  # noqa: F821
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
+    def fold(state, batch):
         import pandas as pd
 
-        gap_us = gap_seconds * 1_000_000
-        (last_us,) = state.get if state.exists else (None,)
+        (last_us,) = state
         kept = []
-        batch = _collect_batch(pdfs, [ts_col, id_col])
-        if batch is None:
-            state.update((last_us,))
-            yield pd.DataFrame([], columns=[key_col, id_col, ts_col])
-            return
-        for ts, eid in zip(batch[ts_col], batch[id_col]):
+        rows = () if batch is None else zip(batch[ts_col], batch[id_col])
+        for ts, eid in rows:
             us = int(pd.Timestamp(ts).value // 1000)
             if last_us is None or us > last_us + gap_us:
-                kept.append(
-                    {key_col: key[0], id_col: int(eid), ts_col: ts}
-                )
+                kept.append((int(eid), ts))
             # Advance monotonically: a late-arriving EARLIER timestamp
             # (out-of-order beyond the replay premise) must not regress
             # the clock and re-open a closed burst.
             last_us = us if last_us is None else max(last_us, us)
-        state.update((last_us,))
-        yield pd.DataFrame(
-            kept, columns=[key_col, id_col, ts_col]
-        )
+        return (last_us,), kept
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        update,
-        DEBOUNCE_OUT_SCHEMA,
-        DEBOUNCE_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        events, key_col, [(id_col, "long"), (ts_col, "timestamp")],
+        "last_us long", (None,), fold, [ts_col, id_col],
     )
-
-
-TOPK_STATE_SCHEMA = "ids array<long>, vals array<double>"
 
 
 def stateful_topk(
@@ -374,33 +303,13 @@ def stateful_topk(
     emits the current top-k with ranks. Without retraction the top-k
     fold IS monotone, so no soundness bound is needed: final emission
     over any prefix equals the batch rank closed form — pinned across
-    real micro-batches by tests/test_streaming_multimodal.py."""
+    real micro-batches by tests/test_stateful.py."""
 
-    # applyInPandasWithState matches pandas column labels to the output
-    # schema BY NAME, so the schema is built from the parameterized
-    # column names — and the group column's TYPE from the input schema
-    # (an int-typed group key would otherwise mismatch at runtime). The
-    # id/value columns stay long/double: the update fn itself casts to
+    # The id/value columns are declared long/double: the fold casts to
     # int()/float() (the state arrays are long/double by declaration).
-    # Identifiers are backtick-quoted in the DDL string so a group/id/
-    # value column whose name needs quoting (reserved word, dots,
-    # spaces) still parses at runtime.
-    group_type = events.schema[group_col].dataType.simpleString()
-    out_schema = (
-        f"`{group_col}` {group_type}, rk int, `{id_col}` long, "
-        f"`{value_col}` double"
-    )
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],  # noqa: F821
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        ids, vals = state.get if state.exists else ([], [])
+    def fold(state, batch):
+        ids, vals = state
         pairs = [(float(v), int(i)) for v, i in zip(vals, ids)]
-        batch = _collect_batch(pdfs)
         if batch is not None:
             pairs += [
                 (float(v), int(i))
@@ -408,26 +317,13 @@ def stateful_topk(
             ]
         pairs.sort(key=lambda p: (-p[0], p[1]))
         pairs = pairs[:k]
-        state.update(
-            ([i for _, i in pairs], [v for v, _ in pairs])
-        )
-        yield pd.DataFrame(
-            [
-                {
-                    group_col: key[0],
-                    "rk": r + 1,
-                    id_col: i,
-                    value_col: v,
-                }
-                for r, (v, i) in enumerate(pairs)
-            ],
-            columns=[group_col, "rk", id_col, value_col],
+        return (
+            ([i for _, i in pairs], [v for v, _ in pairs]),
+            [(r + 1, i, v) for r, (v, i) in enumerate(pairs)],
         )
 
-    return events.groupBy(group_col).applyInPandasWithState(
-        update,
-        out_schema,
-        TOPK_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        events, group_col,
+        [("rk", "int"), (id_col, "long"), (value_col, "double")],
+        "ids array<long>, vals array<double>", ([], []), fold,
     )

@@ -1,8 +1,8 @@
 """Round-10 operator properties: DOULION edge sampling and pins for the
 round-9 ADVICE fixes (topk_retraction emission order + alive_at
-convention, theil degenerate-scale guard, stateful_topk column
-parameterization). The sf0.01 DuckDB differential is the correctness
-gate; these pin the properties the oracles can't express."""
+convention, theil degenerate-scale guard). The sf0.01 DuckDB
+differential is the correctness gate; these pin the properties the
+oracles can't express."""
 
 from __future__ import annotations
 
@@ -117,58 +117,3 @@ def test_theil_index_degenerate_scale_emits_null(spark):
     }
     assert out["tiny"] is None  # rounded mean 0.0 ⇒ NULL, not NaN/Inf
     assert out["ok"] is not None and out["ok"] == out["ok"]  # not NaN
-
-
-def test_stateful_topk_custom_column_names(spark, tmp_path):
-    """The output schema must follow the parameterized column names
-    (applyInPandasWithState matches pandas labels by name)."""
-    import pandas as pd
-
-    from fxspark.streaming.stateful import stateful_topk
-
-    src = spark.createDataFrame(
-        [("a", 1, 5.0), ("a", 2, 9.0), ("b", 3, 1.0)],
-        "grp string, item long, score double",
-    )
-    path = str(tmp_path / "in")
-    src.write.parquet(path)
-    stream = spark.readStream.schema(src.schema).parquet(path)
-    out = stateful_topk(
-        stream, k=2, group_col="grp", id_col="item", value_col="score"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("topk_custom_cols")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    res = spark.sql("select * from topk_custom_cols").toPandas()
-    assert sorted(res.columns) == ["grp", "item", "rk", "score"]
-    a = res[res.grp == "a"].sort_values("rk")
-    assert list(a.item) == [2, 1] and list(a.score) == [9.0, 5.0]
-    assert list(res[res.grp == "b"].item) == [3]
-    assert isinstance(res, pd.DataFrame)
-
-    # INT-typed group column: the output schema derives the group type
-    # from the input schema, not a hard-coded string
-    src_i = spark.createDataFrame(
-        [(7, 1, 5.0), (7, 2, 9.0)], "gk int, item long, score double"
-    )
-    path_i = str(tmp_path / "in_int")
-    src_i.write.parquet(path_i)
-    stream_i = spark.readStream.schema(src_i.schema).parquet(path_i)
-    out_i = stateful_topk(
-        stream_i, k=1, group_col="gk", id_col="item", value_col="score"
-    )
-    qi = (
-        out_i.writeStream.format("memory")
-        .queryName("topk_int_group")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    qi.awaitTermination(120)
-    res_i = spark.sql("select * from topk_int_group").toPandas()
-    assert list(res_i.gk) == [7] and list(res_i.item) == [2]
