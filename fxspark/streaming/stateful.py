@@ -17,7 +17,7 @@ and partitioned on the grouping key, so each operator scales with distinct
 keys, not event volume; the per-batch work is one shuffle on the key plus an
 Arrow-batched pandas step. Keys that go quiet can be expired via a
 processing-time timeout — kept NoTimeout here because the FX pair universe
-is tiny and closed (110 pairs, ``/root/reference/currency_pairs.csv``).
+is tiny and closed (110 pairs, the reference's ``currency_pairs.csv``).
 """
 
 from __future__ import annotations
